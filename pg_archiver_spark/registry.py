@@ -43,79 +43,75 @@ def register(name: str, oracle: Optional[str] = None) -> Callable[[QueryFn], Que
 # only the first 50 registered queries per round (SURVEY.md §9), so
 # registration order is a verification budget that must be RE-PINNED
 # every round (the list does not rotate by itself).
-# ROUND-13 PIN (executes VERDICT r12 item #1): all 50 r12-window names
-# landed fresh r12 evidence (CORRECTNESS_r12 50/50 green) and are
-# deleted. The registry's evidence backlog is empty (394/394 hold a
-# green latest check), so from this round on the window is a pure
-# freshness rotation: lead with any r13 session additions or ops whose
-# output hashes change this session, then fill oldest-driver-evidence-
-# first — here all 32 remaining r4-evidence greens, topped up with the
-# 18 oldest r5-evidence greens in registry order.
-# ROUND-14 PIN (write now in case of context reset): delete every
-# name below that holds r13 evidence (expected: all 50), bump
-# _PIN_ROUND to 14, lead with any r14 session additions / changed-
+# ROUND-14 PIN: all 50 r13-window names landed fresh r13 (and r14)
+# evidence and are deleted. No op's output hash changes in round 14
+# (delete-behind by key range and the schema-pinned ledger read change
+# no registered op's result), so the window is a pure freshness
+# rotation, oldest driver evidence first: all 29 remaining r5-evidence
+# greens, topped up with the 21 oldest r6-evidence greens, each in
+# registry order.
+# ROUND-15 PIN (write now in case of context reset): delete every
+# name below that holds r14 evidence (expected: all 50), bump
+# _PIN_ROUND to 15, lead with any r15 session additions / changed-
 # hash ops, then fill oldest-evidence-first greens — the pool after
-# this rotation is the 26 remaining r5 greens (sim_batch_knn_join,
-# composed_q7_volume_shipping, join_null_safe_eq, and onward in
-# registry order), then r6.
+# this rotation is the 27 remaining r6 greens (scan_parquet_full,
+# sample_deterministic, union_all_multi_table, and onward in registry
+# order), then r7.
 _DRIVER_PRIORITY = [
-    # hashes changed this session (ADVICE r12 fixes: ndcg -1 sentinel
-    # now reachable via left join; KMV/chisq count-magnitude outputs
-    # moved off ROUND(.,6) onto exact-integer ladders):
-    "ml_ndcg_at_k",
-    "agg_kmv_jaccard_estimate",
-    "analytics_chisq_independence",
-    # oldest-driver-evidence greens (all 32 r4-evidence ops, registry
-    # order):
-    "window_gaps_islands",
-    "window_ewma",
-    "analytics_zscore_outliers",
-    "filter_range_cutoff",
-    "filter_conjunction",
-    "cast_epoch_ms",
-    "join_asof",
-    "join_interval_pairs",
-    "join_asof_tolerance",
-    "composed_q3_shipping_priority",
-    "join_bloom_runtime_filter",
-    "composed_q18_large_orders",
-    "sink_csv_roundtrip",
-    "sink_parquet_sorted",
-    "sink_parquet_partitioned",
-    "source_schema_evolution",
-    "sample_stratified",
-    "scan_dpp_partition_pruned",
-    "maintenance_incremental_agg",
-    "layout_zorder_scan",
-    "orderby_limit_topk",
-    "subquery_lateral_topn",
-    "window_topk_per_group",
-    "window_lag_lead",
-    "window_running_sum",
-    "window_first_last",
-    "window_ntile_scalable",
-    "window_scd2_intervals",
-    "stream_tumbling_daily",
-    "stream_dedup_watermark",
-    "stream_rate_trigger",
-    "stream_stream_join",
-    # next-oldest greens (r5 evidence, registry order), topping up to
+    # oldest-driver-evidence greens (all 29 remaining r5-evidence ops,
+    # registry order):
+    "sim_batch_knn_join",
+    "composed_q7_volume_shipping",
+    "join_null_safe_eq",
+    "composed_q4_priority_exists",
+    "join_scd2_pointintime",
+    "composed_q19_disjunctive",
+    "join_asof_nearest",
+    "source_csv_permissive",
+    "scan_metadata_columns",
+    "scan_partition_pruned_static",
+    "composed_q6_forecast_revenue",
+    "maintenance_retention_drop_partitions",
+    "source_jsonl_schema_infer",
+    "maintenance_dataset_diff",
+    "merge_cdc_apply",
+    "window_ratio_to_report",
+    "pipeline_dataset_card",
+    "pipeline_vocab_coverage",
+    "pipeline_dedup_keep_best",
+    "pipeline_quality_weighted_sample",
+    "pipeline_bpe_pair_counts",
+    "text_entropy_quality",
+    "text_gopher_rules",
+    "text_unigram_logprob",
+    "udf_arrow_optimized",
+    "stream_sliding",
+    "stream_session",
+    "stream_static_enrich",
+    "stream_jdbc_sink",
+    # next-oldest greens (r6 evidence, registry order), topping up to
     # 50:
-    "agg_bitmap_distinct",
-    "agg_string_concat_groups",
-    "analytics_mad_outliers",
-    "analytics_markov_transitions",
-    "analytics_rfm_segments",
-    "analytics_linreg_trend",
-    "analytics_cumulative_users",
-    "analytics_ab_ztest",
-    "analytics_time_to_convert",
-    "analytics_seasonality_profile",
-    "analytics_zero_filled_report",
-    "window_nth_value",
-    "composed_q10_returned_items",
-    "composed_q12_priority_shipmode",
-    "composed_q14_promo_revenue",
+    "agg_group_pricing",
+    "agg_having",
+    "agg_distinct_per_group",
+    "agg_rollup",
+    "agg_cube",
+    "agg_grouping_sets",
+    "agg_percentile",
+    "agg_pivot",
+    "agg_time_bucket_rollup",
+    "sim_cosine_topk",
+    "sim_label_avg",
+    "project_prune",
+    "select_literal",
+    "filter_in_list",
+    "filter_null_safe",
+    "join_broadcast_dim",
+    "join_star_multiway",
+    "join_left_outer",
+    "join_semi",
+    "join_anti",
+    "join_theta_range",
 ]
 
 # The round this pin was written for. tests/test_registry_rotation.py
@@ -128,7 +124,7 @@ _DRIVER_PRIORITY = [
 # 1 + the max round present in CORRECTNESS_r*.json, so bumping this
 # without actually re-pinning the window re-arms the tripwire instead
 # of disarming it.
-_PIN_ROUND = 13
+_PIN_ROUND = 14
 
 
 def load_all_operators() -> None:

@@ -78,9 +78,9 @@ def stage_events(spark: SparkSession, sf_dir: str) -> str:
 class DerbyCursor:
     """DB-API-shaped cursor over a driver-side ``java.sql`` connection.
 
-    Implements exactly the surface ``_delete_partition_kernel`` uses:
-    ``execute(sql, params)`` with positional ``?`` placeholders and a
-    ``rowcount`` attribute. Parameters bind via ``setObject`` on a
+    Implements exactly the surface the ``sources.jdbc`` delete kernels
+    use: ``execute(sql, params)`` with positional ``?`` placeholders and
+    a ``rowcount`` attribute. Parameters bind via ``setObject`` on a
     PreparedStatement — a live prepared round-trip, not string splicing.
     """
 
@@ -119,9 +119,10 @@ def connection_factory(spark: SparkSession, url: str):
 
     The returned connection wraps a py4j ``java.sql.Connection``, which
     cannot be pickled to executors — so the factory is marked
-    ``driver_side`` and ``delete_archived`` streams keys through the
-    driver instead of ``mapPartitions`` (the single-writer shape an
-    embedded database implies anyway).
+    ``driver_side`` and ``delete_archived`` deletes from the driver
+    (key runs collected, or keys streamed for non-integer keys) instead
+    of ``mapPartitions`` (the single-writer shape an embedded database
+    implies anyway).
     """
 
     def factory():

@@ -11,18 +11,27 @@ reference achieves by writing its SQL string by hand, but across
 No external database ships in this harness, but Spark's own classpath
 carries embedded Apache Derby — so when no URL is configured,
 ``source_jdbc`` stages the fixture into `jdbc:derby:memory:` and the
-real JDBC branch (pushdown, range-partitioned cursors, live chunked
-DELETE) still executes (see sources/derby.py); the parquet path remains
-only as the degraded fallback (SURVEY.md §7.4 #5: must not fail the
-suite).
+real JDBC branch (pushdown, range-partitioned cursors, live
+delete-behind) still executes (see sources/derby.py); the parquet path
+remains only as the degraded fallback (SURVEY.md §7.4 #5: must not fail
+the suite).
+
+Delete-behind (``delete_archived``) deletes integer keys by range: the
+archived keys are folded into runs of consecutive integers inside the
+JVM and each run is deleted with ``k BETWEEN lo AND hi``. Key types
+without integer runs keep the key-list form, ``k = ANY(keys)`` or
+``k IN (?, ..)``.
 """
 
 from __future__ import annotations
 
 import os
+from itertools import islice
+from operator import itemgetter
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from pg_archiver_spark.catalog import load
 from pg_archiver_spark.registry import register
@@ -104,26 +113,49 @@ def _default_connection_factory():
     return psycopg2.connect(url.removeprefix("jdbc:"))
 
 
+def _key_list_statement(keys, table: str, key_col: str, dialect: str):
+    """One DELETE for a chunk of keys. ``postgres``: one array bind;
+    ``standard``: positional binds and a quoted identifier, for engines
+    without array parameters (Derby)."""
+    if dialect == "postgres":
+        return f"DELETE FROM {table} WHERE {key_col} = ANY(%s)", (keys,)
+    placeholders = ",".join("?" * len(keys))
+    return f'DELETE FROM {table} WHERE "{key_col}" IN ({placeholders})', keys
+
+
+def _range_statement(runs, table: str, key_col: str, dialect: str):
+    """One DELETE for a chunk of ``(lo, hi)`` key runs, one
+    ``BETWEEN`` per run joined by ``OR``."""
+    if dialect == "postgres":
+        between = f"{key_col} BETWEEN %s AND %s"
+    else:
+        between = f'"{key_col}" BETWEEN ? AND ?'
+    where = " OR ".join([between] * len(runs))
+    return f"DELETE FROM {table} WHERE {where}", [b for run in runs for b in run]
+
+
 def _delete_partition_kernel(
-    keys,
+    items,
     table: str,
     key_col: str,
     connection_factory,
     batch_size: int,
     dialect: str = "postgres",
+    statement=_key_list_statement,
 ) -> int:
-    """Delete one partition's archived keys over a fresh connection.
+    """Delete one partition's ledger over a fresh connection.
 
-    Chunked deletes — one round-trip per `batch_size` keys instead of
-    per key (the reference's loop is row-at-a-time, main.go:131-145),
-    committed once per partition so a task retry re-deletes
-    idempotently rather than half-committing. Dialects:
-    ``postgres`` — `DELETE ... WHERE k = ANY(%s)` (one array bind);
-    ``standard`` — `DELETE ... WHERE "k" IN (?, ..)` (positional binds,
-    quoted identifier) for engines without array parameters (Derby).
+    ``items`` are keys (``_key_list_statement``) or ``(lo, hi)`` key
+    runs (``_range_statement``), sent ``batch_size`` per statement — one
+    round-trip per chunk, where the reference's loop is row-at-a-time
+    (main.go:131-145) — and committed once per partition so a task
+    retry re-deletes idempotently rather than half-committing. Opens no
+    connection when ``items`` is empty.
     """
-    batch = []
-    deleted = 0
+    it = iter(items)
+    batch = list(islice(it, batch_size))
+    if not batch:
+        return 0
     conn = connection_factory()
     if conn is None:
         # The driver-side configured check already passed, so a None
@@ -136,32 +168,61 @@ def _delete_partition_kernel(
             "delete-behind: connection_factory returned None on an "
             "executor after the driver-side configuration check passed"
         )
+    deleted = 0
     try:
         cur = conn.cursor()
-        it = iter(keys)
-        while True:
-            batch = [k for _, k in zip(range(batch_size), it)]
-            if not batch:
-                break
-            if dialect == "postgres":
-                cur.execute(
-                    f"DELETE FROM {table} WHERE {key_col} = ANY(%s)", (batch,)
-                )
-            else:
-                placeholders = ",".join("?" * len(batch))
-                cur.execute(
-                    f'DELETE FROM {table} WHERE "{key_col}"'
-                    f" IN ({placeholders})",
-                    batch,
-                )
+        while batch:
+            cur.execute(*statement(batch, table, key_col, dialect))
             # DB-API allows rowcount == -1 ("unknown"); only positive
             # counts are real deletions.
             if cur.rowcount and cur.rowcount > 0:
                 deleted += cur.rowcount
+            batch = list(islice(it, batch_size))
         conn.commit()
     finally:
         conn.close()
     return deleted
+
+
+# Key runs are found per bucket of 2^20 consecutive key values, so the
+# window sorts one bucket per task instead of every key in one task.
+_RUN_BUCKET_BITS = 20
+
+
+def _key_runs(keys: DataFrame) -> DataFrame:
+    """Maximal runs of consecutive integers in a one-column key frame,
+    as ``(lo, hi)`` rows: gaps-and-islands, ``k - dense_rank()`` grouped
+    to ``min``/``max``. Null keys are dropped (``IN`` never matches
+    them either) and duplicates share a rank. The window is partitioned
+    by key bucket (``k >> 20``) and the rank is taken from the in-bucket
+    offset (``k & (2^20 - 1)``) rather than from ``k``, so nothing
+    overflows at the int64 edges; a run that crosses a bucket edge comes
+    back as two adjacent runs."""
+    k = F.col(keys.columns[0]).cast("long")
+    bucketed = (
+        keys.select(k.alias("k"))
+        .where(F.col("k").isNotNull())
+        .withColumn("b", F.shiftright("k", _RUN_BUCKET_BITS))
+    )
+    offset = F.col("k").bitwiseAND(F.lit((1 << _RUN_BUCKET_BITS) - 1))
+    rank = F.dense_rank().over(Window.partitionBy("b").orderBy("k"))
+    return (
+        bucketed.withColumn("g", offset - rank)
+        .groupBy("b", "g")
+        .agg(F.min("k").alias("lo"), F.max("k").alias("hi"))
+        .select("lo", "hi")
+    )
+
+
+def _merge_runs(runs) -> list[tuple[int, int]]:
+    """Sort runs and join those that abut (split at a bucket edge)."""
+    merged: list[tuple[int, int]] = []
+    for lo, hi in sorted(runs):
+        if merged and lo == merged[-1][1] + 1:
+            merged[-1] = (merged[-1][0], hi)
+        else:
+            merged.append((lo, hi))
+    return merged
 
 
 def delete_archived(
@@ -177,12 +238,22 @@ def delete_archived(
 
     The reference deletes everything below the cutoff even though it
     archived at most 100 rows; the correct contract is to delete EXACTLY
-    the archived keys. Runs as the foreachBatch delete side of the
-    archival sink: the key frame is distributed, and each partition
-    opens its own connection and issues chunked
-    ``DELETE FROM t WHERE k = ANY(keys)`` — so delete throughput scales
-    with partitions, and no driver-side collect of the key set ever
-    happens (at 100 TB the archived-key frame is itself large).
+    the archived keys. Integer keys are deleted by range: the ledger's
+    keys become maximal runs of consecutive integers in one JVM
+    aggregate (``_key_runs``), and each run is deleted with
+    ``k BETWEEN lo AND hi``, ``batch_size`` runs per statement. A run
+    holds only ledger keys, so for integer keys the range deletes
+    exactly what ``k IN (keys)`` would. Other key types keep the
+    key-list form, ``k = ANY(keys)`` / ``k IN (?, ..)`` in chunks of
+    ``batch_size`` keys.
+
+    Each partition of runs (or keys) opens its own connection and
+    commits once, so delete throughput scales with partitions and the
+    key set is never collected to the driver. A connection factory
+    marked ``driver_side`` (an embedded database) gets one writer on
+    the driver instead: runs are collected, runs split at bucket edges
+    merged, and deleted in one transaction. No connection is opened
+    for an empty ledger.
 
     Returns the number of deleted rows; 0 (no-op) when no database is
     configured, so the suite stays green without one.
@@ -193,29 +264,29 @@ def delete_archived(
         connection_factory = _default_connection_factory
 
     keys_only = key_df.select(F.col(key_col))
+    if isinstance(keys_only.schema[0].dataType, IntegralType):
+        statement, items, item = _range_statement, _key_runs(keys_only), tuple
+    else:
+        statement, items, item = _key_list_statement, keys_only, itemgetter(0)
     if getattr(connection_factory, "driver_side", False):
         # Single-writer path for connections that cannot ship to
         # executors (an embedded database's py4j-wrapped java.sql
-        # connection). Keys stream through toLocalIterator — bounded
-        # driver memory, one partition at a time — but throughput is
-        # one writer; the mapPartitions path below is the scale path.
+        # connection).
+        if statement is _range_statement:
+            # bounded: one row per key run (the ledger's gaps + 1).
+            rows = _merge_runs(map(item, items.collect()))
+        else:
+            # Keys stream one partition at a time: bounded driver memory.
+            rows = map(item, items.toLocalIterator())
         return _delete_partition_kernel(
-            (r[0] for r in keys_only.toLocalIterator()),
-            table,
-            key_col,
-            connection_factory,
-            batch_size,
-            dialect,
+            rows, table, key_col, connection_factory, batch_size, dialect,
+            statement,
         )
-    counts = keys_only.rdd.mapPartitions(
-        lambda rows: [
+    counts = items.rdd.mapPartitions(
+        lambda part: [
             _delete_partition_kernel(
-                (r[0] for r in rows),
-                table,
-                key_col,
-                connection_factory,
-                batch_size,
-                dialect,
+                map(item, part), table, key_col, connection_factory,
+                batch_size, dialect, statement,
             )
         ]
     )

@@ -183,18 +183,24 @@ def archive_batch(
         tagged = part if tagged is None else tagged.unionByName(part)
 
     out = os.path.join(archive_dir, f"batch_id={batch_id}")
+    archived = tagged.withColumn("year", F.year("ts")).withColumn(
+        "month", F.month("ts")
+    )
     # Overwrite of the batch's own directory → a retry of the same batch
     # is idempotent (D3).
     (
-        tagged.withColumn("year", F.year("ts"))
-        .withColumn("month", F.month("ts"))
-        .write.mode("overwrite")
+        archived.write.mode("overwrite")
         .partitionBy("year", "month")
         .option("compression", "snappy")
         .parquet(out)
     )
-    spark = tagged.sparkSession
-    return spark.read.parquet(out).select("table_name", "event_id")
+    # The ledger is read back from the committed output (D3) at the
+    # schema just written, which skips Parquet schema inference.
+    return (
+        tagged.sparkSession.read.schema(archived.schema)
+        .parquet(out)
+        .select("table_name", "event_id")
+    )
 
 
 @register(
@@ -258,8 +264,10 @@ def stream_archival_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(os.path.join(archive, f"batch_id={batch_id}"))
         )
         # Delete ledger = exactly the keys just archived (D1): the JDBC
-        # delete-behind runs `DELETE ... WHERE id IN (ledger)` — never a
-        # blanket `< cutoff` that would drop unarchived rows.
+        # delete-behind (sources.jdbc.delete_archived) deletes integer
+        # keys as `id BETWEEN lo AND hi` over the ledger's runs of
+        # consecutive ids, other key types as `id IN (ledger)` — never
+        # a blanket `< cutoff` that would drop unarchived rows.
         (
             to_archive.select("event_id")
             .write.mode("overwrite")

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from pg_archiver_spark.operators.sorts import archive_selection
@@ -143,7 +144,8 @@ def test_delete_kernel_deletes_exact_keys_in_chunks():
 
 def test_delete_archived_distributes_exact_key_set(spark, tmp_path):
     """The distributed path deletes each archived key exactly once,
-    partition-wise, with no driver-side collect of the key frame."""
+    partition-wise, with no driver-side collect of the key frame. Long
+    keys go out as BETWEEN ranges; expanding them gives every key once."""
     from pg_archiver_spark.sources.jdbc import delete_archived
 
     sink = str(tmp_path / "deleted")
@@ -159,8 +161,11 @@ def test_delete_archived_distributes_exact_key_set(spark, tmp_path):
             rowcount = 0
 
             def execute(self, sql, params):
-                assert sql == "DELETE FROM iot_data WHERE event_id = ANY(%s)"
-                (keys,) = params
+                runs = list(zip(params[::2], params[1::2]))
+                assert sql == "DELETE FROM iot_data WHERE " + " OR ".join(
+                    ["event_id BETWEEN %s AND %s"] * len(runs)
+                )
+                keys = [k for lo, hi in runs for k in range(lo, hi + 1)]
                 path = os.path.join(sink, uuid.uuid4().hex)
                 with open(path, "w") as f:
                     f.write("\n".join(str(k) for k in keys))
@@ -232,6 +237,121 @@ def test_delete_kernel_ignores_unknown_rowcount():
     )
     assert n == 0
     assert sorted(k for _, keys in log for k in keys) == list(range(5))
+
+
+class _FakeTable:
+    """An in-memory table behind a driver-side DB-API factory: applies
+    each ``standard``-dialect BETWEEN DELETE it is sent to its row set,
+    so rowcounts and survivors are real."""
+
+    def __init__(self, rows):
+        self.rows = set(rows)
+        self.statements = []
+        self.connections = 0
+        self.commits = 0
+
+    def factory(self):
+        table = self
+
+        class Cursor:
+            rowcount = -1
+
+            def execute(self, sql, params):
+                table.statements.append((sql, list(params)))
+                runs = list(zip(params[::2], params[1::2]))
+                hit = {r for r in table.rows if any(lo <= r <= hi for lo, hi in runs)}
+                table.rows -= hit
+                self.rowcount = len(hit)
+
+        class Conn:
+            def cursor(self):
+                return Cursor()
+
+            def commit(self):
+                table.commits += 1
+
+            def close(self):
+                pass
+
+        def connect():
+            table.connections += 1
+            return Conn()
+
+        connect.driver_side = True
+        return connect
+
+
+_RUN_CASES = {
+    "contiguous": (list(range(3, 11)), [(3, 10)]),
+    "fragmented": ([1, 2, 4, 5, 9, 12, 13, 14], [(1, 2), (4, 5), (9, 9), (12, 14)]),
+    "duplicates": ([4, 4, 5, 5, 5, 7, 7], [(4, 5), (7, 7)]),
+    "nulls": ([None, 2, None, 3, 8], [(2, 3), (8, 8)]),
+    "negative": ([-5, -4, -3, -1, 0, 1], [(-5, -3), (-1, 1)]),
+    "single": ([6], [(6, 6)]),
+    "empty": ([], []),
+    # Adjacent keys either side of a 2^20 bucket edge merge into one run.
+    "bucket_edge": (
+        [(1 << 20) - 2, (1 << 20) - 1, 1 << 20, (1 << 20) + 1],
+        [((1 << 20) - 2, (1 << 20) + 1)],
+    ),
+}
+
+
+def _delete_case(spark, keys, key_type="long", batch_size=1000):
+    from pg_archiver_spark.sources.jdbc import delete_archived
+
+    present = {k for k in keys if k is not None}
+    table = _FakeTable(present | set(range(-8, 16)))
+    ledger = spark.createDataFrame([(k,) for k in keys], f"event_id {key_type}")
+    n = delete_archived(
+        spark, "events", ledger, key_col="event_id",
+        connection_factory=table.factory(), batch_size=batch_size, dialect="standard",
+    )
+    return n, table, present
+
+
+@pytest.mark.parametrize("case", sorted(_RUN_CASES))
+def test_delete_archived_deletes_exact_key_runs(spark, case):
+    """D1 by range: integer ledgers become maximal runs of consecutive
+    keys, one BETWEEN per run in one statement and one commit, and the
+    rows deleted are exactly the ledger's distinct non-null keys."""
+    keys, runs = _RUN_CASES[case]
+    n, table, present = _delete_case(spark, keys)
+    assert n == len(present)
+    assert not (table.rows & present)
+    assert table.rows >= set(range(-8, 16)) - present
+    if not runs:
+        assert (table.connections, table.statements) == (0, [])
+        return
+    expected_sql = 'DELETE FROM events WHERE ' + " OR ".join(
+        ['"event_id" BETWEEN ? AND ?'] * len(runs)
+    )
+    assert table.statements == [(expected_sql, [b for run in runs for b in run])]
+    assert (table.connections, table.commits) == (1, 1)
+
+
+def test_delete_archived_batches_runs_per_statement(spark):
+    """``batch_size`` counts runs per statement on the range path."""
+    keys = [0, 2, 4, 6, 8]
+    n, table, _ = _delete_case(spark, keys, key_type="int", batch_size=2)
+    assert n == 5
+    assert [p for _, p in table.statements] == [[0, 0, 2, 2], [4, 4, 6, 6], [8, 8]]
+    assert table.commits == 1
+
+
+@pytest.mark.parametrize("key_type", ["long", "string"])
+def test_delete_archived_empty_ledger_opens_no_connection(spark, key_type):
+    """An empty ledger on the distributed path deletes nothing and never
+    opens a connection (no no-op commit per partition)."""
+    from pg_archiver_spark.sources.jdbc import delete_archived
+
+    def factory():
+        raise AssertionError("connection opened for an empty ledger")
+
+    keys = spark.createDataFrame([], f"event_id {key_type}").repartition(3)
+    assert delete_archived(
+        spark, "iot_data", keys, key_col="event_id", connection_factory=factory
+    ) == 0
 
 
 def test_delete_archived_noop_without_database(spark):

@@ -4,6 +4,8 @@ database connection, no monkeypatching."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from pg_archiver_spark.catalog import load
@@ -107,6 +109,99 @@ def test_delete_behind_live_roundtrip(spark, sf_dir):
     )
     # Restore for other tests sharing the memoized staging DB.
     derby._STAGED.pop((sf_dir, "events"), None)
+
+
+def _recording_factory(spark, url, statements):
+    """Derby factory whose cursors log every statement they execute."""
+    inner = derby.connection_factory(spark, url)
+
+    class Cursor(derby.DerbyCursor):
+        def execute(self, sql, params=None):
+            statements.append(sql)
+            super().execute(sql, params)
+
+    class Conn(derby.DerbyConnection):
+        def cursor(self):
+            return Cursor(self._jconn)
+
+    def factory():
+        return Conn(inner()._jconn)
+
+    factory.driver_side = True
+    return factory
+
+
+def _derby_events(spark, url):
+    return (
+        spark.read.format("jdbc")
+        .option("url", url)
+        .option("dbtable", "events")
+        .option("driver", derby.DERBY_DRIVER)
+        .load()
+    )
+
+
+def _derby_keys(spark, url):
+    return sorted(r[0] for r in _derby_events(spark, url).select("event_id").collect())
+
+
+def test_delete_behind_fragmented_ledger_live(spark, tmp_path):
+    """Range delete-behind on a live table: keys 1..10 staged, a
+    fragmented ledger {1, 2, 4, 5, 9} archived and deleted. Exactly the
+    ledger goes (three BETWEEN runs in one statement); 3, 6, 7, 8 and 10
+    survive."""
+    from datetime import datetime
+
+    from pg_archiver_spark.streaming.archival import archive_batch
+
+    rows = [(k, datetime(2024, 1, k), k % 3, float(k)) for k in range(1, 11)]
+    url = derby.stage_frame(
+        spark,
+        spark.createDataFrame(rows, "event_id long, ts timestamp, user_id long, value double"),
+        "events",
+    )
+    ledger = archive_batch(
+        {"events": _derby_events(spark, url)}, lambda d: d.event_id.isin(1, 2, 4, 5, 9), str(tmp_path / "archive")
+    )
+    statements = []
+    deleted = delete_archived(
+        spark, "events", ledger, key_col="event_id",
+        connection_factory=_recording_factory(spark, url, statements),
+        dialect="standard",
+    )
+    assert deleted == 5
+    assert _derby_keys(spark, url) == [3, 6, 7, 8, 10]
+    assert statements == [
+        'DELETE FROM events WHERE "event_id" BETWEEN ? AND ?'
+        ' OR "event_id" BETWEEN ? AND ? OR "event_id" BETWEEN ? AND ?'
+    ]
+
+
+def test_delete_behind_string_keys_live(spark):
+    """String keys have no integer runs: the live delete keeps the
+    key-list IN form and still deletes exactly the ledger."""
+    # Spark writes strings to Derby as CLOB, which has no equality, so
+    # the table is created with a VARCHAR key over plain JDBC.
+    url = f"jdbc:derby:memory:pgarch_strkeys_{os.getpid()}"
+    conn = spark._jvm.java.sql.DriverManager.getConnection(f"{url};create=true")
+    try:
+        st = conn.createStatement()
+        st.executeUpdate('CREATE TABLE events ("event_id" VARCHAR(8))')
+        st.executeUpdate(
+            "INSERT INTO events VALUES " + ",".join(f"('k{i}')" for i in range(6))
+        )
+    finally:
+        conn.close()
+    ledger = spark.createDataFrame([("k1",), ("k2",), ("k4",)], "event_id string")
+    statements = []
+    deleted = delete_archived(
+        spark, "events", ledger, key_col="event_id",
+        connection_factory=_recording_factory(spark, url, statements),
+        dialect="standard",
+    )
+    assert deleted == 3
+    assert _derby_keys(spark, url) == ["k0", "k3", "k5"]
+    assert statements == ['DELETE FROM events WHERE "event_id" IN (?,?,?)']
 
 
 def test_jdbc_poll_loop_partitions_arrivals(spark, sf_dir):
