@@ -13,9 +13,21 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Local test default. On a cluster these come from spark-submit / the
-# cluster manager; everything below that is master-independent.
-_LOCAL_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def _local_cpus() -> str:
+    """Local core count: ``SPARK_GRAFT_CPUS`` if set (a positive
+    integer), else the CPUs this process may run on. On a cluster the
+    cores come from spark-submit / the cluster manager instead."""
+    value = os.environ.get("SPARK_GRAFT_CPUS")
+    if value is None:
+        return str(len(os.sched_getaffinity(0)))
+    try:
+        cpus = int(value)
+    except ValueError:
+        cpus = 0
+    if cpus <= 0:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {value!r}")
+    return str(cpus)
 
 
 def s3a_committer_confs() -> dict[str, str]:
@@ -66,7 +78,8 @@ def get_spark(app_name: str = "pg_archiver_spark", shuffle_partitions: int | Non
     initial value); at sf0.1 on one box a small value avoids tiny-task
     overhead.
     """
-    n_shuffle = str(shuffle_partitions or _LOCAL_CPUS)
+    cpus = _local_cpus()
+    n_shuffle = str(shuffle_partitions or cpus)
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", n_shuffle)
@@ -119,7 +132,7 @@ def get_spark(app_name: str = "pg_archiver_spark", shuffle_partitions: int | Non
         for k, v in s3a_committer_confs().items():
             builder = builder.config(k, v)
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
-        builder = builder.master(f"local[{_LOCAL_CPUS}]").config("spark.driver.memory", "48g")
+        builder = builder.master(f"local[{cpus}]").config("spark.driver.memory", "48g")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

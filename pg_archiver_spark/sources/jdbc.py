@@ -16,11 +16,19 @@ delete-behind) still executes (see sources/derby.py); the parquet path
 remains only as the degraded fallback (SURVEY.md §7.4 #5: must not fail
 the suite).
 
-Delete-behind (``delete_archived``) deletes integer keys by range: the
-archived keys are folded into runs of consecutive integers inside the
-JVM and each run is deleted with ``k BETWEEN lo AND hi``. Key types
-without integer runs keep the key-list form, ``k = ANY(keys)`` or
-``k IN (?, ..)``.
+Range partitions are bounded by one ``MIN``/``MAX`` query over a
+driver-side ``java.sql`` connection, not by a Spark job; an empty table
+is read through a single cursor.
+
+Delete-behind (``delete_archived``) deletes integer keys by range, one
+``k BETWEEN lo AND hi`` per run of consecutive keys. A ledger returned
+by ``archive_batch`` carries the runs its write proved (its observed
+keys were exactly ``[lo, hi]``, or there were none); those are deleted
+straight from the driver with no ledger scan and no Spark job. Any
+other integer ledger (fragmented, duplicated, spanning 2^15 keys or
+more, or a frame derived from the ledger) is folded into runs inside
+the JVM (``_key_runs``). Key types without integer runs keep the
+key-list form, ``k = ANY(keys)`` or ``k IN (?, ..)``.
 """
 
 from __future__ import annotations
@@ -53,46 +61,58 @@ def read_table(
 
     JDBC path mirrors the reference's extraction contract with pushdown
     enabled and, when a numeric partition column is given, range-split
-    parallel cursors (lowerBound/upperBound probed with one min/max
-    round-trip — the scale replacement for the single cursor loop).
+    parallel cursors (the scale replacement for the single cursor loop).
+    lowerBound/upperBound come from one ``MIN``/``MAX`` query over a
+    driver-side ``java.sql`` connection (``_column_bounds``), so
+    bounding the partitions launches no Spark job. An empty table has
+    NULL bounds and is read through one cursor with no range options.
     Identifiers in the probe are double-quoted (SQL standard): Spark's
     JDBC writer quote-creates columns, so unquoted names resolve in
-    Postgres but not in case-sensitive engines like Derby; the bounds
-    row is read positionally for the same reason (unquoted aliases
-    fold to upper case there).
+    Postgres but not in case-sensitive engines like Derby.
     """
     url = url or os.environ.get(_URL_ENV)
     if not url:
         return load(spark, sf_dir, table), "parquet-fallback"
 
-    def _with_driver(reader):
-        return reader.option("driver", driver) if driver else reader
-
-    reader = _with_driver(
+    reader = (
         spark.read.format("jdbc")
         .option("url", url)
         .option("dbtable", table)
         .option("pushDownPredicate", "true")
         .option("pushDownLimit", "true")
     )
+    if driver:
+        reader = reader.option("driver", driver)
     if partition_column:
-        bounds = (
-            _with_driver(spark.read.format("jdbc").option("url", url))
-            .option(
-                "query",
-                f'SELECT MIN("{partition_column}") lo,'
-                f' MAX("{partition_column}") hi FROM {table}',
+        lo, hi = _column_bounds(spark, url, driver, table, partition_column)
+        if lo is not None:
+            reader = (
+                reader.option("partitionColumn", partition_column)
+                .option("lowerBound", str(lo))
+                .option("upperBound", str(hi))
+                .option("numPartitions", str(num_partitions))
             )
-            .load()
-            .first()
-        )
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("lowerBound", str(bounds[0]))
-            .option("upperBound", str(bounds[1]))
-            .option("numPartitions", str(num_partitions))
-        )
     return reader.load(), "jdbc"
+
+
+def _column_bounds(spark: SparkSession, url: str, driver: str | None, table: str, column: str):
+    """``(MIN, MAX)`` of ``column`` over one driver-side ``java.sql``
+    connection; ``(None, None)`` for an empty table."""
+    jvm = spark._jvm
+    if driver:
+        # Spark's JDBC source registers its driver class the same way,
+        # which makes a driver jar shipped with the application visible
+        # to DriverManager.
+        jvm.org.apache.spark.sql.execution.datasources.jdbc.DriverRegistry.register(driver)
+    conn = jvm.java.sql.DriverManager.getConnection(url)
+    try:
+        rs = conn.createStatement().executeQuery(
+            f'SELECT MIN("{column}"), MAX("{column}") FROM {table}'
+        )
+        rs.next()
+        return rs.getObject(1), rs.getObject(2)
+    finally:
+        conn.close()
 
 
 def _default_connection_factory():
@@ -238,14 +258,27 @@ def delete_archived(
 
     The reference deletes everything below the cutoff even though it
     archived at most 100 rows; the correct contract is to delete EXACTLY
-    the archived keys. Integer keys are deleted by range: the ledger's
-    keys become maximal runs of consecutive integers in one JVM
-    aggregate (``_key_runs``), and each run is deleted with
-    ``k BETWEEN lo AND hi``, ``batch_size`` runs per statement. A run
-    holds only ledger keys, so for integer keys the range deletes
-    exactly what ``k IN (keys)`` would. Other key types keep the
-    key-list form, ``k = ANY(keys)`` / ``k IN (?, ..)`` in chunks of
-    ``batch_size`` keys.
+    the archived keys. A ledger with a ``table_name`` column (what
+    ``archive_batch`` returns) may hold several tables; only the rows
+    tagged ``table`` are deleted.
+
+    Integer keys are deleted by range, ``k BETWEEN lo AND hi`` per run
+    of consecutive keys, ``batch_size`` runs per statement. A run holds
+    only ledger keys, so for integer keys the range deletes exactly
+    what ``k IN (keys)`` would. Where the runs come from:
+
+    - proven at write time: ``key_df`` is a ledger ``archive_batch``
+      returned and its ``proven_runs`` holds ``(table, key_col)``,
+      because the write observed exactly the keys ``[lo, hi]`` (or
+      none). Those runs are deleted from the driver in one transaction,
+      with no ledger scan and no Spark job.
+    - otherwise (fragmented or duplicated keys, a span of 2^15 keys or
+      more, a frame derived from the ledger, any other frame): the
+      ledger's keys become maximal runs in one JVM aggregate
+      (``_key_runs``).
+
+    Other key types keep the key-list form, ``k = ANY(keys)`` /
+    ``k IN (?, ..)`` in chunks of ``batch_size`` keys.
 
     Each partition of runs (or keys) opens its own connection and
     commits once, so delete throughput scales with partitions and the
@@ -263,6 +296,14 @@ def delete_archived(
             return 0
         connection_factory = _default_connection_factory
 
+    proven = vars(key_df).get("proven_runs", {}).get((table, key_col))
+    if proven is not None:
+        return _delete_partition_kernel(
+            proven, table, key_col, connection_factory, batch_size, dialect,
+            _range_statement,
+        )
+    if "table_name" in key_df.columns:
+        key_df = key_df.where(F.col("table_name") == table)
     keys_only = key_df.select(F.col(key_col))
     if isinstance(keys_only.schema[0].dataType, IntegralType):
         statement, items, item = _range_statement, _key_runs(keys_only), tuple

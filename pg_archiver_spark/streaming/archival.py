@@ -24,8 +24,9 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from pg_archiver_spark.catalog import load
 from pg_archiver_spark.registry import register
@@ -163,23 +164,82 @@ def _stage_quartile_batches(events: DataFrame, staging: str, cols) -> None:
     shutil.rmtree(tmp, ignore_errors=True)
 
 
+# The ledger's key column.
+_LEDGER_KEY = "event_id"
+
+# A window of at most 2^15 consecutive integers maps one-to-one onto
+# pmod(k, 2^15), so a bitmap over those positions counts the distinct
+# keys of any such window (negative keys included).
+_PROOF_SPAN = 1 << 15
+
+
+def _key_metrics(df: DataFrame, key: str) -> list:
+    """The write-time metrics of one table's slice: the row count, and
+    for an integral key its min, max and distinct-key bitmap count.
+    Built from SQL text: one parse per metric costs fewer round trips
+    to the JVM than composing each function call."""
+    metrics = [F.expr("count(1) AS n")]
+    if isinstance(df.schema[key].dataType, IntegralType):
+        k = f"`{key}`"
+        position = f"bitmap_bit_position(pmod({k}, {_PROOF_SPAN}) + 1)"
+        metrics += [
+            F.expr(f"min({k}) AS lo"),
+            F.expr(f"max({k}) AS hi"),
+            F.expr(f"bitmap_count(bitmap_construct_agg({position})) AS `distinct`"),
+        ]
+    return metrics
+
+
+def _proven_run(m: dict) -> list[tuple[int, int]] | None:
+    """The key runs one table's observed metrics prove: ``[]`` for an
+    empty slice, ``[(lo, hi)]`` when the slice held each key of
+    ``[lo, hi]`` exactly once, else None. ``n`` rows with ``n`` distinct
+    positions and ``n == hi - lo + 1`` proves it: a bitmap count never
+    exceeds 2^15, so the window is at most 2^15 wide, where positions
+    and keys correspond one to one."""
+    if m["n"] == 0:
+        return []
+    lo, hi = m.get("lo"), m.get("hi")
+    if lo is not None and m["n"] == m["distinct"] == hi - lo + 1:
+        return [(lo, hi)]
+    return None
+
+
 def archive_batch(
     tagged_sources: dict[str, DataFrame],
     cutoff_col_expr,
     archive_dir: str,
     batch_id: int = 0,
 ) -> DataFrame:
-    """One archival batch over pre-loaded source frames.
+    """One archival batch over pre-loaded source frames, in one Spark job.
 
     The reference's whole run() (main.go:147-256) as one lazy plan:
     filter-below-cutoff per table → lineage tag (A6) → union (A7) →
     per-row year/month partitioned Snappy Parquet (A10-A12, D2 fixed).
     Returns the archived keys ledger (table_name, event_id) — the exact
-    delete set (D1 fixed).
+    delete set (D1 fixed), read back from the committed output (D3).
+
+    Each table's slice is observed while it is written (one
+    ``DataFrame.observe`` per table, no extra job), and the ledger
+    carries what the write saw:
+
+    - ``archived_rows``: ``{table: rows archived}``;
+    - ``proven_runs``: ``{(table, "event_id"): runs}`` for each table
+      whose keys the write proved — ``[(lo, hi)]`` when it archived
+      each integer of ``[lo, hi]`` exactly once, ``[]`` when it
+      archived nothing. ``sources.jdbc.delete_archived`` deletes those
+      runs without scanning the ledger. Fragmented or duplicated keys,
+      spans of 2^15 keys or more and non-integral keys prove nothing,
+      and neither does any frame derived from the ledger (it does not
+      carry these attributes), so their delete folds the keys into runs
+      itself.
     """
+    observed = {}
     tagged = None
     for name, df in tagged_sources.items():
         part = df.filter(cutoff_col_expr(df)).withColumn("table_name", F.lit(name))
+        observed[name] = Observation()
+        part = part.observe(observed[name], *_key_metrics(part, _LEDGER_KEY))
         tagged = part if tagged is None else tagged.unionByName(part)
 
     out = os.path.join(archive_dir, f"batch_id={batch_id}")
@@ -196,11 +256,19 @@ def archive_batch(
     )
     # The ledger is read back from the committed output (D3) at the
     # schema just written, which skips Parquet schema inference.
-    return (
+    ledger = (
         tagged.sparkSession.read.schema(archived.schema)
         .parquet(out)
-        .select("table_name", "event_id")
+        .select("table_name", _LEDGER_KEY)
     )
+    metrics = {name: obs.get for name, obs in observed.items()}
+    ledger.archived_rows = {name: m["n"] for name, m in metrics.items()}
+    ledger.proven_runs = {
+        (name, _LEDGER_KEY): runs
+        for name, m in metrics.items()
+        if (runs := _proven_run(m)) is not None
+    }
+    return ledger
 
 
 @register(

@@ -395,3 +395,220 @@ def test_zscore_kernel_degenerate_groups():
         {"event_id": [1, 2], "user_id": [7, 7], "value": [2.0, 2.0]}
     )
     assert _zscore_group(constant)["zscore"].tolist() == [0.0, 0.0]
+
+
+# --- Delete-behind proved at write time -------------------------------
+
+from hypothesis import example, given, settings  # noqa: E402
+from hypothesis import strategies as st  # noqa: E402
+
+from pg_archiver_spark.sources.jdbc import delete_archived  # noqa: E402
+
+
+def _spark_jobs(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def _archive_keys(spark, keys_by_table, archive_dir):
+    """``archive_batch`` over one frame per table holding ``keys``."""
+    sources = {
+        name: _mk_events(spark, [(k, datetime(2024, 1, 10), 1, 1.0) for k in keys])
+        for name, keys in keys_by_table.items()
+    }
+    return archive_batch(sources, lambda d: F.lit(True), archive_dir)
+
+
+def _deleted(spark, ledger, keys, table="events"):
+    """Delete ``ledger`` for ``table`` from a fake table holding ``keys``
+    and -8..15. Returns the deleted keys, the fake table and the number
+    of Spark jobs the delete launched."""
+    fake = _FakeTable(set(keys) | set(range(-8, 16)))
+    before = set(fake.rows)
+    jobs = _spark_jobs(spark)
+    n = delete_archived(
+        spark, table, ledger, key_col="event_id",
+        connection_factory=fake.factory(), dialect="standard",
+    )
+    jobs = _spark_jobs(spark) - jobs
+    assert n == len(before - fake.rows)
+    return before - fake.rows, fake, jobs
+
+
+_ledgers = st.one_of(
+    # gaps, duplicates, negative keys and runs that cross 0
+    st.lists(st.integers(-40, 40), max_size=30),
+    # one run anywhere in the int64 range
+    st.builds(
+        lambda lo, n: list(range(lo, lo + n)),
+        st.integers(-(2**63), 2**63 - 65),
+        st.integers(1, 64),
+    ),
+)
+
+
+@given(keys=_ledgers)
+@example(keys=[])
+@example(keys=list(range(-(1 << 14), 1 << 14)))  # span of exactly 2^15
+@example(keys=list(range(-(1 << 14), (1 << 14) + 1)))  # one wider
+@example(keys=[0, 1 << 15])  # equal pmod positions
+@settings(max_examples=20, deadline=None)
+def test_proven_runs_delete_what_key_runs_delete(spark, tmp_path_factory, keys):
+    """A write proves ``[lo, hi]`` exactly when it archived each key of
+    it once (span at most 2^15), and the proven run deletes the same
+    set as ``_key_runs`` over the same ledger (reached through a derived
+    frame, which carries no proof)."""
+    ledger = _archive_keys(spark, {"events": keys}, str(tmp_path_factory.mktemp("proof")))
+    distinct = set(keys)
+    contiguous = len(distinct) == len(keys) and (
+        not keys or max(keys) - min(keys) + 1 == len(keys) <= 1 << 15
+    )
+    expected = ([(min(keys), max(keys))] if keys else []) if contiguous else None
+    assert ledger.proven_runs.get(("events", "event_id")) == expected
+    assert ledger.archived_rows == {"events": len(keys)}
+
+    via_proof, _, jobs = _deleted(spark, ledger, keys)
+    via_runs, _, _ = _deleted(spark, ledger.where(F.lit(True)), keys)
+    assert via_proof == via_runs == distinct
+    if expected is not None:
+        assert jobs == 0
+
+
+def test_empty_slice_deletes_without_connection_or_job(spark, tmp_path):
+    """Archiving nothing proves an empty ledger: the delete opens no
+    connection and launches no Spark job."""
+    ledger = _archive_keys(spark, {"events": []}, str(tmp_path / "archive"))
+    assert ledger.proven_runs == {("events", "event_id"): []}
+
+    def factory():
+        raise AssertionError("connection opened for an empty slice")
+
+    jobs = _spark_jobs(spark)
+    assert delete_archived(
+        spark, "events", ledger, key_col="event_id", connection_factory=factory
+    ) == 0
+    assert _spark_jobs(spark) == jobs
+
+
+def test_archive_batch_proves_each_table_separately(spark, tmp_path):
+    """Each table is observed on its own: a contiguous table is proven
+    and deleted with one BETWEEN and no job; a fragmented one in the
+    same batch falls back, and each delete takes only its own table's
+    keys although the key ranges overlap."""
+    ledger = _archive_keys(
+        spark, {"events": [1, 2, 3, 4, 5], "logs": [3, 4, 9]}, str(tmp_path / "archive")
+    )
+    assert ledger.proven_runs == {("events", "event_id"): [(1, 5)]}
+    assert ledger.archived_rows == {"events": 5, "logs": 3}
+
+    events, fake, jobs = _deleted(spark, ledger, [1, 2, 3, 4, 5], "events")
+    assert (events, jobs) == ({1, 2, 3, 4, 5}, 0)
+    assert [p for _, p in fake.statements] == [[1, 5]]
+    logs, fake, jobs = _deleted(spark, ledger, [3, 4, 9], "logs")
+    assert logs == {3, 4, 9} and jobs > 0
+    assert [p for _, p in fake.statements] == [[3, 4, 9, 9]]
+
+
+def test_derived_ledger_takes_fallback(spark, tmp_path):
+    """A frame derived from a proven ledger carries no proof: its delete
+    folds its own keys into runs (Spark jobs) and deletes only them."""
+    ledger = _archive_keys(spark, {"events": list(range(10))}, str(tmp_path / "archive"))
+    assert ledger.proven_runs == {("events", "event_id"): [(0, 9)]}
+    subset = ledger.filter(F.col("event_id") % 3 != 0)
+    assert "proven_runs" not in vars(subset)
+    deleted, fake, jobs = _deleted(spark, subset, range(10))
+    assert deleted == {1, 2, 4, 5, 7, 8} and jobs > 0
+    assert [p for _, p in fake.statements] == [[1, 2, 4, 5, 7, 8]]
+
+
+_RETRY_SCRIPT = r"""
+import json, os, sys
+
+from pyspark import TaskContext
+from pyspark.sql import SparkSession, functions as F
+
+from pg_archiver_spark.sources.jdbc import delete_archived
+from pg_archiver_spark.streaming.archival import archive_batch
+
+archive, marker = sys.argv[1], sys.argv[2]
+# local[2,2]: two cores, and a failed task is tried twice.
+spark = (
+    SparkSession.builder.master("local[2,2]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.execution.arrow.maxRecordsPerBatch", "50")
+    .getOrCreate()
+)
+
+
+@F.pandas_udf("long")
+def fail_first_attempt(k):
+    # Fails the first attempt of write task 0 on its last Arrow batch,
+    # after the earlier batches have passed the observation.
+    tc = TaskContext.get()
+    if tc.partitionId() == 0 and tc.attemptNumber() == 0 and (k == 999).any():
+        open(marker, "w").close()
+        raise RuntimeError("injected task failure")
+    return k
+
+
+src = spark.range(0, 2000, numPartitions=2).select(
+    fail_first_attempt("id").alias("event_id"),
+    F.timestamp_seconds(F.lit(1704067200) + F.col("id") * 3600).alias("ts"),
+)
+ledger = archive_batch({"events": src}, lambda d: F.lit(True), archive)
+
+
+class Cursor:
+    rowcount = 0
+
+    def execute(self, sql, params):
+        runs.append(list(params))
+
+
+class Conn:
+    def cursor(self):
+        return Cursor()
+
+    def commit(self):
+        pass
+
+    def close(self):
+        pass
+
+
+runs = []
+delete_archived(spark, "events", ledger, key_col="event_id",
+                connection_factory=Conn, dialect="standard")
+back = spark.read.parquet(os.path.join(archive, "batch_id=0"))
+print(json.dumps({
+    "archived_rows": ledger.archived_rows,
+    "proven": {t: r for (t, _), r in ledger.proven_runs.items()},
+    "runs": runs,
+    "rows": back.count(),
+    "keys": back.select("event_id").distinct().count(),
+}))
+"""
+
+
+def test_task_retry_counts_each_row_once(tmp_path):
+    """A write task that fails once and is retried (local[2,2]) leaves
+    the observed count, the proof and the delete set as without the
+    failure, and the archive holds each row once."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    marker = tmp_path / "failed-once"
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")])))
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT, str(tmp_path / "archive"), str(marker)],
+        capture_output=True, text=True, env=env, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert marker.exists(), "the injected failure never ran"
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["archived_rows"] == {"events": 2000}
+    assert out["proven"] == {"events": [[0, 1999]]}
+    assert out["runs"] == [[0, 1999]]
+    assert out["rows"] == out["keys"] == 2000

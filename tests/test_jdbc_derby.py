@@ -204,6 +204,82 @@ def test_delete_behind_string_keys_live(spark):
     assert statements == ['DELETE FROM events WHERE "event_id" IN (?,?,?)']
 
 
+def _stage_keys(spark, keys):
+    from datetime import datetime
+
+    rows = [(k, datetime(2024, 1, 1 + k % 28), k % 3, float(k)) for k in keys]
+    return derby.stage_frame(
+        spark,
+        spark.createDataFrame(rows, "event_id long, ts timestamp, user_id long, value double"),
+        "events",
+    )
+
+
+def test_read_table_empty_source_live(spark):
+    """A fully archived (empty) table has NULL bounds: read_table reads
+    it through one cursor instead of failing on a "None" bound, and
+    probing the bounds launches no Spark job."""
+    url = _stage_keys(spark, [])
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs = dag.numTotalJobs()
+    df, mode = read_table(
+        spark, "events", "", partition_column="event_id", num_partitions=4,
+        url=url, driver=derby.DERBY_DRIVER,
+    )
+    assert dag.numTotalJobs() == jobs
+    assert mode == "jdbc"
+    assert df.rdd.getNumPartitions() == 1
+    assert df.count() == 0
+
+
+def test_read_table_bounds_launch_no_job_live(spark):
+    """The MIN/MAX probe runs over a driver-side connection: range
+    partitioning a live table launches no Spark job."""
+    url = _stage_keys(spark, range(1, 41))
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs = dag.numTotalJobs()
+    df, _ = read_table(
+        spark, "events", "", partition_column="event_id", num_partitions=4,
+        url=url, driver=derby.DERBY_DRIVER,
+    )
+    assert dag.numTotalJobs() == jobs
+    assert df.rdd.getNumPartitions() == 4
+    assert sorted(r[0] for r in df.select("event_id").collect()) == list(range(1, 41))
+
+
+def test_delete_behind_only_its_table_live(spark, tmp_path):
+    """A two-table ledger {events: 1, 2; logs: 7, 8} deletes only the
+    events rows tagged in it from the live events table (keys 1..10),
+    on the proven path and on the fallback (a derived frame)."""
+    from datetime import datetime
+
+    from pg_archiver_spark.streaming.archival import archive_batch
+
+    logs = spark.createDataFrame(
+        [(k, datetime(2024, 1, 1), 0, 0.0) for k in (7, 8)],
+        "event_id long, ts timestamp, user_id long, value double",
+    )
+    for n, derive in enumerate([lambda d: d, lambda d: d.where(F.lit(True))]):
+        url = _stage_keys(spark, range(1, 11))
+        ledger = archive_batch(
+            {
+                "events": _derby_events(spark, url).where(F.col("event_id") <= 2),
+                "logs": logs,
+            },
+            lambda d: F.lit(True),
+            str(tmp_path / f"archive{n}"),
+        )
+        statements = []
+        deleted = delete_archived(
+            spark, "events", derive(ledger), key_col="event_id",
+            connection_factory=_recording_factory(spark, url, statements),
+            dialect="standard",
+        )
+        assert deleted == 2
+        assert _derby_keys(spark, url) == list(range(3, 11))
+        assert statements == ['DELETE FROM events WHERE "event_id" BETWEEN ? AND ?']
+
+
 def test_jdbc_poll_loop_partitions_arrivals(spark, sf_dir):
     """Two polls around a live JDBC append must partition the fixture:
     first poll sees the staged half, second poll exactly the appended

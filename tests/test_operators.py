@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from pg_archiver_spark.operators.setops import union_all
@@ -709,6 +710,29 @@ def test_s3a_committer_confs_shape():
     assert "PathOutputCommitProtocol" in confs["spark.sql.sources.commitProtocolClass"]
     joined = " ".join(confs) + " ".join(confs.values())
     assert "secret" not in joined.lower() and "key.id" not in joined.lower()
+
+
+@pytest.mark.parametrize("value", ["0", "-2", "abc", "1.5", ""])
+def test_local_cpus_rejects_invalid_setting(monkeypatch, value):
+    """An invalid SPARK_GRAFT_CPUS fails loudly instead of reaching
+    the master URL."""
+    from pg_archiver_spark.session import _local_cpus
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", value)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS must be a positive integer"):
+        _local_cpus()
+
+
+def test_local_cpus_defaults_to_the_host(monkeypatch):
+    """Unset, the local core count is the CPUs this process may use."""
+    import os
+
+    from pg_archiver_spark.session import _local_cpus
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert _local_cpus() == str(len(os.sched_getaffinity(0)))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert _local_cpus() == "3"
 
 
 def test_every_collect_site_is_justified_bounded():

@@ -111,6 +111,25 @@ def test_cli_archiver_runs(spark, sf_dir, tmp_path, monkeypatch):
     assert dict(back.dtypes)["ts"].startswith("timestamp")
 
 
+def test_cli_archiver_counts_from_the_write(spark, sf_dir, tmp_path, monkeypatch):
+    """The CLI's per-table counts come from the write's observed
+    metrics and equal a count over the archive it wrote; the report
+    keeps its fields."""
+    from pg_archiver_spark.archiver import run
+
+    monkeypatch.setenv("ARCHIVER_CUTOFF", "2024-01-15")
+    monkeypatch.setenv("ARCHIVER_SOURCE_DIR", sf_dir)
+    monkeypatch.setenv("ARCHIVER_DEST_DIR", str(tmp_path / "archive"))
+    stats = run()
+    back = spark.read.parquet(str(tmp_path / "archive"))
+    expected = {r["table_name"]: r["count"] for r in back.groupBy("table_name").count().collect()}
+    assert stats["archived_per_table"] == expected
+    assert stats["archived_rows"] == sum(expected.values()) > 0
+    assert set(stats) == {
+        "batch_id", "tables", "archived_rows", "archived_per_table", "dest", "source_mode",
+    }
+
+
 def test_stream_stream_join_equals_batch_join(spark, sf_dir):
     """The watermarked stream-stream interval join must produce exactly
     the batch join's pair set (the 30-day watermark exceeds the
