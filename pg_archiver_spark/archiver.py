@@ -7,7 +7,8 @@ Env configuration mirrors the reference's getEnv defaults
   ARCHIVER_TABLES           comma-separated table list (default "events")
   ARCHIVER_RETENTION_DAYS   days to keep (default 90; main.go:153)
   ARCHIVER_SOURCE_DIR       parquet source dir (or PG_ARCHIVER_JDBC_URL
-                            for a live database via sources.jdbc)
+                            for a live database via sources.jdbc); one
+                            of the two is required
   ARCHIVER_DEST_DIR         archive root (local path or s3a:// URI —
                             the committer handles the upload the
                             reference did by hand, main.go:211-241; an
@@ -36,7 +37,7 @@ import time
 from pyspark.sql import functions as F
 
 from pg_archiver_spark.session import get_spark
-from pg_archiver_spark.sources.jdbc import read_table
+from pg_archiver_spark.sources.jdbc import _URL_ENV, read_table
 from pg_archiver_spark.streaming.archival import archive_batch
 
 
@@ -48,7 +49,9 @@ def _env(key: str, default: str) -> str:
 def run() -> dict:
     tables = [t.strip() for t in _env("ARCHIVER_TABLES", "events").split(",") if t.strip()]
     retention_days = int(_env("ARCHIVER_RETENTION_DAYS", "90"))
-    source_dir = _env("ARCHIVER_SOURCE_DIR", "/root/testdata/sf0.001")
+    source_dir = _env("ARCHIVER_SOURCE_DIR", "")
+    if not source_dir and not os.environ.get(_URL_ENV):
+        raise ValueError(f"set ARCHIVER_SOURCE_DIR or {_URL_ENV}: the archiver has no source")
     dest_dir = _env("ARCHIVER_DEST_DIR", "/tmp/pg_archiver_spark/cli_archive")
     ts_column = _env("ARCHIVER_TS_COLUMN", "ts")
     explicit_cutoff = os.environ.get("ARCHIVER_CUTOFF")

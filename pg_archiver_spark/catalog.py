@@ -9,6 +9,7 @@ schema code needed per table.
 
 from __future__ import annotations
 
+import os
 import weakref
 from datetime import datetime, timezone
 
@@ -67,34 +68,47 @@ def _pin_timestamp_confs(spark: SparkSession) -> None:
 # id) through this guard.
 _PINNED_SESSIONS: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
+
+def _stamp(path: str) -> tuple[int, int] | None:
+    """``(st_size, st_mtime_ns)`` of a local path: a rewritten file
+    changes it. None where ``os.stat`` cannot see the path (a URI)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_size, st.st_mtime_ns
+
+
 # Footer schemas already inferred this process, keyed by parquet path
 # (r13, guide §6/§7.3): ``spark.read.parquet`` re-infers the schema from
 # the file footer on EVERY call (~80 ms of driver-side listing +
-# footer I/O at sf0.1) — per query, per pass, for an immutable fixture
-# file whose schema cannot change mid-process. The first load of each
-# path still reads the real footer (the events µs/ns adaptation below
-# keeps working); later loads pass the known schema explicitly — the
-# metastore pattern, exactly what a catalog table gives a cluster. This
-# memoizes METADATA only: every query still scans the parquet data
-# itself on every run (no result or intermediate is cached).
-_SCHEMA_CACHE: dict[str, StructType] = {}
+# footer I/O at sf0.1) — per query, per pass. Each entry carries the
+# path's _stamp; a rewritten file misses and its real footer is read
+# again (the events µs/ns adaptation below keeps working). A hit passes
+# the known schema explicitly — the metastore pattern, exactly what a
+# catalog table gives a cluster. This memoizes METADATA only: every
+# query still scans the parquet data itself on every run (no result or
+# intermediate is cached).
+_SCHEMA_CACHE: dict[str, tuple[tuple[int, int] | None, StructType]] = {}
 
 
 def _read_table(spark: SparkSession, path: str) -> DataFrame:
-    sch = _SCHEMA_CACHE.get(path)
-    if sch is None:
+    stamp = _stamp(path)
+    hit = _SCHEMA_CACHE.get(path)
+    if hit is None or hit[0] != stamp:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
+        _SCHEMA_CACHE[path] = (stamp, df.schema)
         return df
-    return spark.read.schema(sch).parquet(path)
+    return spark.read.schema(hit[1]).parquet(path)
 
 
 # Scan split counts already probed this process, keyed by parquet path
-# (r14, VERDICT r13 item 2): the count is metadata — physical planning
-# over an immutable fixture file, no job — so probe once per path like
-# the footer-schema cache above (the .rdd conversion costs ~0.1 s per
-# call, too much to pay per query construction).
-_SCAN_SPLITS_CACHE: dict[str, int] = {}
+# (r14, VERDICT r13 item 2): the count is metadata — physical planning,
+# no job — but the .rdd conversion costs ~0.1 s per call, too much to
+# pay per query construction. The count depends on the file and on the
+# two confs that size splits, so each entry carries all three and any
+# change is a miss.
+_SCAN_SPLITS_CACHE: dict[str, tuple[tuple, int]] = {}
 
 
 def fan_out(
@@ -112,11 +126,12 @@ def fan_out(
     the fact table for zero benefit at 100 TB (VERDICT r13 item 2)."""
     par = spark.sparkContext.defaultParallelism
     key = f"{sf_dir}/{name}.parquet"
-    splits = _SCAN_SPLITS_CACHE.get(key)
-    if splits is None:
-        splits = load(spark, sf_dir, name).rdd.getNumPartitions()
-        _SCAN_SPLITS_CACHE[key] = splits
-    if splits >= par:
+    state = (_stamp(key), spark.conf.get("spark.sql.files.maxPartitionBytes"), par)
+    hit = _SCAN_SPLITS_CACHE.get(key)
+    if hit is None or hit[0] != state:
+        hit = (state, load(spark, sf_dir, name).rdd.getNumPartitions())
+        _SCAN_SPLITS_CACHE[key] = hit
+    if hit[1] >= par:
         return df
     return df.repartition(par)
 

@@ -1627,10 +1627,10 @@ def sim_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Catalyst pruned the partial count from this branch's copy of the
     # tf aggregate, making the two tf subtrees canonically different —
     # the exchange could not be reused and the corpus scan + split +
-    # explode + panel semi-join ran TWICE (guide §2.4; plan evidence in
-    # plans/r13/sim_bm25_topk_{before,after}.txt: 2 Generate → 1 with
-    # ReusedExchange). NOTE: F.count("tf") would not work —
-    # NullPropagation rewrites count(non-nullable) back to count(1).
+    # explode + panel semi-join ran TWICE (guide §2.4; the formatted
+    # plan went from 2 Generate nodes to 1 with a ReusedExchange).
+    # NOTE: F.count("tf") would not work — NullPropagation rewrites
+    # count(non-nullable) back to count(1).
     dfr = tf.groupBy("w").agg(
         F.sum(F.when(F.col("tf") >= 1, 1).otherwise(0))
         .cast("long")

@@ -391,6 +391,19 @@ def _pagerank_oracle() -> str:
     """
 
 
+def _pagerank_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Directed (src, dst) edges of the supplier↔part graph: both
+    directions of every distinct (l_suppkey, l_partkey) pair. The set is
+    symmetric, so every node has out-degree > 0 and receives mass each
+    round — graph_pagerank relies on both."""
+    sp = load(spark, sf_dir, "lineitem").select("l_suppkey", "l_partkey").distinct()
+    s = F.concat(F.lit("s:"), F.col("l_suppkey"))
+    p = F.concat(F.lit("p:"), F.col("l_partkey"))
+    return sp.select(s.alias("src"), p.alias("dst")).union(
+        sp.select(p.alias("src"), s.alias("dst"))
+    )
+
+
 @register("graph_pagerank", oracle=_pagerank_oracle())
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the bipartite supplier↔part graph induced by
@@ -404,20 +417,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     round to keep the lineage flat (same discipline as dedup.py's CC
     loop) at half the job barriers.
     Output: top-20 nodes by rank, deterministic id tiebreak."""
-    li = load(spark, sf_dir, "lineitem")
-    sp = li.select("l_suppkey", "l_partkey").distinct()
-    edges = (
-        sp.select(
-            F.concat(F.lit("s:"), F.col("l_suppkey")).alias("src"),
-            F.concat(F.lit("p:"), F.col("l_partkey")).alias("dst"),
-        )
-        .union(
-            sp.select(
-                F.concat(F.lit("p:"), F.col("l_partkey")).alias("src"),
-                F.concat(F.lit("s:"), F.col("l_suppkey")).alias("dst"),
-            )
-        )
-    )
+    edges = _pagerank_edges(spark, sf_dir)
     out_deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     edges_deg = edges.join(out_deg, "src").cache()
     nodes = edges.select(F.col("src").alias("node")).distinct().cache()
@@ -433,7 +433,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("node")
             .agg(F.sum("contrib").alias("in_mass"))
         )
-        # bipartite + undirected ⇒ every node has out-edges, so no
+        # _pagerank_edges is symmetric ⇒ every node has out-edges, so no
         # dangling-mass term; teleport keeps the total mass at 1.
         # The symmetric edge set also means every node RECEIVES mass
         # (in-degree = out-degree > 0), so contribs covers the full

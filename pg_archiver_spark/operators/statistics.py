@@ -1271,7 +1271,7 @@ def analytics_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this parallelism and fan_out adds no exchange. The exchange, when
     # it fires, carries only (o_orderkey, o_totalprice): Catalyst prunes
     # the scan to those 2 columns below the round-robin exchange
-    # (plans/r14/analytics_permutation_test_before.txt node (1)-(2)).
+    # (the formatted plan's first two nodes).
     base = fan_out(spark, orders, sf_dir, "orders").selectExpr(
         "CAST(o_totalprice AS DECIMAL(18,2)) AS v",
         _ind("_obs", "i_obs"),

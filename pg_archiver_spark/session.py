@@ -30,6 +30,38 @@ def _local_cpus() -> str:
     return str(cpus)
 
 
+def _memory_limit() -> int:
+    """Bytes this process may use: physical memory, or its cgroup's
+    memory limit (v2 ``memory.max``, v1 ``memory.limit_in_bytes``) when
+    that is smaller."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open("/proc/self/cgroup") as f:
+            entries = [line.rstrip("\n").split(":", 2) for line in f]
+    except OSError:
+        entries = []
+    for _, controllers, path in entries:
+        if not controllers:
+            name = f"/sys/fs/cgroup{path}/memory.max"
+        elif "memory" in controllers.split(","):
+            name = f"/sys/fs/cgroup/memory{path}/memory.limit_in_bytes"
+        else:
+            continue
+        try:
+            with open(name) as f:
+                limit = min(limit, int(f.read()))
+        except (OSError, ValueError):  # no such file, or "max": no limit
+            pass
+    return limit
+
+
+def _driver_memory() -> str:
+    """Local driver heap: half of ``_memory_limit``, capped at 48g. An
+    explicit ``--driver-memory`` in PYSPARK_SUBMIT_ARGS still wins:
+    spark-submit prefers it to the builder's ``spark.driver.memory``."""
+    return f"{min(48 * 2**10, _memory_limit() // 2**21)}m"
+
+
 def s3a_committer_confs() -> dict[str, str]:
     """Spark confs for a correct, fast S3 object-store sink (reference
     A12: PutObject upload, main.go:211-241) — the "magic" S3A committer,
@@ -132,7 +164,9 @@ def get_spark(app_name: str = "pg_archiver_spark", shuffle_partitions: int | Non
         for k, v in s3a_committer_confs().items():
             builder = builder.config(k, v)
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
-        builder = builder.master(f"local[{cpus}]").config("spark.driver.memory", "48g")
+        builder = builder.master(f"local[{cpus}]").config(
+            "spark.driver.memory", _driver_memory()
+        )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -22,6 +22,7 @@ NOTIFY/LISTEN feed named in README.md:124).
 from __future__ import annotations
 
 import os
+import re
 import shutil
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -69,10 +70,12 @@ def _scoped_state_partitions(spark: SparkSession, default: str):
 
     r14 (VERDICT r13 item 1): also scopes the state-store PROVIDER via
     SPARK_GRAFT_STATE_PROVIDER ("hdfs" | "rocksdb" | a full provider
-    class name; unset = leave the session default). The r13 RocksDB
-    rejection was adjudicated at fixture key cardinality, where the
-    in-memory HDFSBackedStateStore has nothing to spill; re-A/B'd at
-    262144 live keys / 1.05M sessions (tools/r14_state_ab.py, same
+    class name; unset = leave the session default; anything else raises
+    ValueError before the query starts). A provider key the session did
+    not set on entry is unset again on exit. The r13 RocksDB rejection
+    was adjudicated at fixture key cardinality, where the in-memory
+    HDFSBackedStateStore has nothing to spill; re-A/B'd at 262144 live
+    keys / 1.05M sessions (a synthetic corpus through the same
     applyInPandasWithState topology): RocksDB 109.0-109.3 s at 32/64
     partitions vs HDFS best 125.9 s at 32 (and HDFS degrades to 218 s
     at 64 while RocksDB stays flat), with the HDFS provider holding
@@ -93,22 +96,29 @@ def _scoped_state_partitions(spark: SparkSession, default: str):
         ),
     }
     _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
+    raw = os.environ.get("SPARK_GRAFT_STATE_PROVIDER")
+    provider = _PROVIDERS.get(raw.lower(), raw) if raw else None
+    dotted = r"[A-Za-z_$][\w$]*(\.[A-Za-z_$][\w$]*)+"
+    if provider and not re.fullmatch(dotted, provider):
+        raise ValueError(
+            "SPARK_GRAFT_STATE_PROVIDER must be 'hdfs', 'rocksdb' or a "
+            f"provider class name, got {raw!r}"
+        )
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
         "spark.sql.shuffle.partitions",
         os.environ.get("SPARK_GRAFT_STATE_PARTS", default),
     )
-    provider = os.environ.get("SPARK_GRAFT_STATE_PROVIDER")
-    prev_provider = spark.conf.get(_PROVIDER_KEY, _PROVIDERS["hdfs"])
+    prev_provider = spark.conf.get(_PROVIDER_KEY, None)  # None: unset
     if provider:
-        spark.conf.set(
-            _PROVIDER_KEY, _PROVIDERS.get(provider.lower(), provider)
-        )
+        spark.conf.set(_PROVIDER_KEY, provider)
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if provider:
+        if provider and prev_provider is None:
+            spark.conf.unset(_PROVIDER_KEY)
+        elif provider:
             spark.conf.set(_PROVIDER_KEY, prev_provider)
 
 
