@@ -43,6 +43,7 @@ from pyspark.sql.types import IntegralType
 
 from pg_archiver_spark.catalog import load
 from pg_archiver_spark.registry import register
+from pg_archiver_spark.sources import derby
 
 # Standard PG JDBC env configuration; unset in this harness.
 _URL_ENV = "PG_ARCHIVER_JDBC_URL"
@@ -53,7 +54,7 @@ def read_table(
     table: str,
     sf_dir: str,
     partition_column: str | None = None,
-    num_partitions: int = 8,
+    num_partitions: int | None = None,
     url: str | None = None,
     driver: str | None = None,
 ) -> tuple[DataFrame, str]:
@@ -61,7 +62,8 @@ def read_table(
 
     JDBC path mirrors the reference's extraction contract with pushdown
     enabled and, when a numeric partition column is given, range-split
-    parallel cursors (the scale replacement for the single cursor loop).
+    parallel cursors (the scale replacement for the single cursor loop),
+    by default one per core (``defaultParallelism``).
     lowerBound/upperBound come from one ``MIN``/``MAX`` query over a
     driver-side ``java.sql`` connection (``_column_bounds``), so
     bounding the partitions launches no Spark job. An empty table has
@@ -90,7 +92,7 @@ def read_table(
                 reader.option("partitionColumn", partition_column)
                 .option("lowerBound", str(lo))
                 .option("upperBound", str(hi))
-                .option("numPartitions", str(num_partitions))
+                .option("numPartitions", str(num_partitions or spark.sparkContext.defaultParallelism))
             )
     return reader.load(), "jdbc"
 
@@ -113,6 +115,18 @@ def _column_bounds(spark: SparkSession, url: str, driver: str | None, table: str
         return rs.getObject(1), rs.getObject(2)
     finally:
         conn.close()
+
+
+def url_backend(spark: SparkSession, url: str):
+    """``(connection_factory, dialect, driver)`` for a JDBC URL, chosen
+    by its scheme: embedded Derby deletes from the driver over
+    ``java.sql`` in the standard dialect, Postgres through psycopg2."""
+    if url.startswith("jdbc:derby:"):
+        return derby.connection_factory(spark, url), "standard", derby.DERBY_DRIVER
+    if url.startswith("jdbc:postgresql:"):
+        import psycopg2  # noqa: F401, PLC0415 — fail before archiving, not at the delete
+        return _default_connection_factory, "postgres", None
+    raise ValueError(f"{_URL_ENV}={url!r}: expected a jdbc:derby: or jdbc:postgresql: URL")
 
 
 def _default_connection_factory():
@@ -365,8 +379,6 @@ def source_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver = None
     backend = "external"
     if not url:
-        from pg_archiver_spark.sources import derby
-
         try:
             url = derby.stage_events(spark, sf_dir)
             driver = derby.DERBY_DRIVER
@@ -434,8 +446,6 @@ def source_jdbc_poll(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserts exactly-once coverage: the two polls partition the full
     fixture with no overlap (raises RuntimeError otherwise, like
     stream_progress_metrics). Returns one row per poll."""
-    from pg_archiver_spark.sources import derby
-
     events = load(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "value"
     )

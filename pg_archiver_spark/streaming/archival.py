@@ -1,22 +1,9 @@
-"""The archiver itself — pg-archiver's pipeline, Spark-native.
-
-Reference pipeline (main.go:147-256): per-table cursor read below a
-cutoff → in-memory union → single Parquet file keyed by the batch's max
-timestamp → S3 PutObject → DELETE everything below the cutoff. Four
-defects documented in SURVEY.md §4.4 are fixed here:
-
-  D1 read-limit/delete-all data loss → delete exactly the archived key
-     set (the ledger written per batch), never a blanket cutoff DELETE
-  D2 single-partition misplacement   → per-row partitionBy(year, month)
-  D3 non-atomic archive+delete       → idempotent per-batch-id output
-     dirs: a retried micro-batch overwrites its own output, and the
-     delete ledger is derived from committed archive output only
-  D4 fixed temp path collisions      → committer-managed task files
-  D5 timestamp type erasure          → real TimestampType in the archive
-
-Batch mode = one call; streaming mode = readStream + foreachBatch over
-a growing staging directory (the file-source stand-in for the Postgres
-NOTIFY/LISTEN feed named in README.md:124).
+"""Streaming registry ops: windows, watermarks, state, triggers and
+the two streaming archivers — ``stream_archival_foreachbatch`` (a
+file-source stand-in for the Postgres NOTIFY/LISTEN feed named in
+README.md:124) and ``source_notify_push_archival`` — both of which
+archive through ``archiver.archive_batch``, whose docstring states the
+D1-D5 defect fixes.
 """
 
 from __future__ import annotations
@@ -24,11 +11,12 @@ from __future__ import annotations
 import os
 import re
 import shutil
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegralType
 
+from pg_archiver_spark.archiver import archive_batch
 from pg_archiver_spark.catalog import load
 from pg_archiver_spark.registry import register
 
@@ -36,9 +24,6 @@ from pg_archiver_spark.registry import register
 # or the driver alongside anything) must not rmtree each other's staging
 # or checkpoint dirs mid-stream.
 _WORK_ROOT = f"/tmp/pg_archiver_spark-{os.getpid()}"
-
-
-from contextlib import contextmanager
 
 
 @contextmanager
@@ -174,113 +159,6 @@ def _stage_quartile_batches(events: DataFrame, staging: str, cols) -> None:
     shutil.rmtree(tmp, ignore_errors=True)
 
 
-# The ledger's key column.
-_LEDGER_KEY = "event_id"
-
-# A window of at most 2^15 consecutive integers maps one-to-one onto
-# pmod(k, 2^15), so a bitmap over those positions counts the distinct
-# keys of any such window (negative keys included).
-_PROOF_SPAN = 1 << 15
-
-
-def _key_metrics(df: DataFrame, key: str) -> list:
-    """The write-time metrics of one table's slice: the row count, and
-    for an integral key its min, max and distinct-key bitmap count.
-    Built from SQL text: one parse per metric costs fewer round trips
-    to the JVM than composing each function call."""
-    metrics = [F.expr("count(1) AS n")]
-    if isinstance(df.schema[key].dataType, IntegralType):
-        k = f"`{key}`"
-        position = f"bitmap_bit_position(pmod({k}, {_PROOF_SPAN}) + 1)"
-        metrics += [
-            F.expr(f"min({k}) AS lo"),
-            F.expr(f"max({k}) AS hi"),
-            F.expr(f"bitmap_count(bitmap_construct_agg({position})) AS `distinct`"),
-        ]
-    return metrics
-
-
-def _proven_run(m: dict) -> list[tuple[int, int]] | None:
-    """The key runs one table's observed metrics prove: ``[]`` for an
-    empty slice, ``[(lo, hi)]`` when the slice held each key of
-    ``[lo, hi]`` exactly once, else None. ``n`` rows with ``n`` distinct
-    positions and ``n == hi - lo + 1`` proves it: a bitmap count never
-    exceeds 2^15, so the window is at most 2^15 wide, where positions
-    and keys correspond one to one."""
-    if m["n"] == 0:
-        return []
-    lo, hi = m.get("lo"), m.get("hi")
-    if lo is not None and m["n"] == m["distinct"] == hi - lo + 1:
-        return [(lo, hi)]
-    return None
-
-
-def archive_batch(
-    tagged_sources: dict[str, DataFrame],
-    cutoff_col_expr,
-    archive_dir: str,
-    batch_id: int = 0,
-) -> DataFrame:
-    """One archival batch over pre-loaded source frames, in one Spark job.
-
-    The reference's whole run() (main.go:147-256) as one lazy plan:
-    filter-below-cutoff per table → lineage tag (A6) → union (A7) →
-    per-row year/month partitioned Snappy Parquet (A10-A12, D2 fixed).
-    Returns the archived keys ledger (table_name, event_id) — the exact
-    delete set (D1 fixed), read back from the committed output (D3).
-
-    Each table's slice is observed while it is written (one
-    ``DataFrame.observe`` per table, no extra job), and the ledger
-    carries what the write saw:
-
-    - ``archived_rows``: ``{table: rows archived}``;
-    - ``proven_runs``: ``{(table, "event_id"): runs}`` for each table
-      whose keys the write proved — ``[(lo, hi)]`` when it archived
-      each integer of ``[lo, hi]`` exactly once, ``[]`` when it
-      archived nothing. ``sources.jdbc.delete_archived`` deletes those
-      runs without scanning the ledger. Fragmented or duplicated keys,
-      spans of 2^15 keys or more and non-integral keys prove nothing,
-      and neither does any frame derived from the ledger (it does not
-      carry these attributes), so their delete folds the keys into runs
-      itself.
-    """
-    observed = {}
-    tagged = None
-    for name, df in tagged_sources.items():
-        part = df.filter(cutoff_col_expr(df)).withColumn("table_name", F.lit(name))
-        observed[name] = Observation()
-        part = part.observe(observed[name], *_key_metrics(part, _LEDGER_KEY))
-        tagged = part if tagged is None else tagged.unionByName(part)
-
-    out = os.path.join(archive_dir, f"batch_id={batch_id}")
-    archived = tagged.withColumn("year", F.year("ts")).withColumn(
-        "month", F.month("ts")
-    )
-    # Overwrite of the batch's own directory → a retry of the same batch
-    # is idempotent (D3).
-    (
-        archived.write.mode("overwrite")
-        .partitionBy("year", "month")
-        .option("compression", "snappy")
-        .parquet(out)
-    )
-    # The ledger is read back from the committed output (D3) at the
-    # schema just written, which skips Parquet schema inference.
-    ledger = (
-        tagged.sparkSession.read.schema(archived.schema)
-        .parquet(out)
-        .select("table_name", _LEDGER_KEY)
-    )
-    metrics = {name: obs.get for name, obs in observed.items()}
-    ledger.archived_rows = {name: m["n"] for name, m in metrics.items()}
-    ledger.proven_runs = {
-        (name, _LEDGER_KEY): runs
-        for name, m in metrics.items()
-        if (runs := _proven_run(m)) is not None
-    }
-    return ledger
-
-
 @register(
     "stream_archival_foreachbatch",
     # Round-8 conversion (rows-only → sql-checked): every output field
@@ -303,17 +181,18 @@ def archive_batch(
     """,
 )
 def stream_archival_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The incremental archiver: micro-batch read → cutoff filter →
-    partitioned Parquet append → delete-behind, with D1/D3 fixes.
+    """The incremental archiver: each micro-batch goes through
+    ``archive_batch`` — cutoff filter, partitioned Parquet write to its
+    own batch directory (a retried batch overwrites it, D3), and the
+    exact key ledger a delete-behind would take (D1).
 
-    Staging parquet files stand in for the Postgres source; foreachBatch
-    is where a JDBC sink would run the ledger-driven DELETE in the same
-    batch function. Output: one summary row asserting the safety
+    Staging parquet files stand in for the Postgres source, so nothing
+    is deleted; the remaining rows are the source anti-joined with the
+    archive's keys. Output: one summary row asserting the safety
     invariants (archived ∪ remaining == source, archived ∩ remaining == ∅).
     """
     staging = _fresh_dir("archival", "staging")
     archive = _fresh_dir("archival", "archive")
-    ledger = _fresh_dir("archival", "ledger")
     checkpoint = _fresh_dir("archival", "checkpoint")
 
     events = (
@@ -327,30 +206,7 @@ def stream_archival_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff = F.lit("2024-01-15 00:00:00").cast("timestamp")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        to_archive = (
-            batch_df.filter(F.col("ts") < cutoff)
-            .withColumn("table_name", F.lit("events"))
-            .withColumn("year", F.year("ts"))
-            .withColumn("month", F.month("ts"))
-        )
-        # Idempotent per-batch output (D3): a retried batch overwrites
-        # its own batch_id directory instead of double-appending.
-        (
-            to_archive.write.mode("overwrite")
-            .partitionBy("year", "month")
-            .option("compression", "snappy")
-            .parquet(os.path.join(archive, f"batch_id={batch_id}"))
-        )
-        # Delete ledger = exactly the keys just archived (D1): the JDBC
-        # delete-behind (sources.jdbc.delete_archived) deletes integer
-        # keys as `id BETWEEN lo AND hi` over the ledger's runs of
-        # consecutive ids, other key types as `id IN (ledger)` — never
-        # a blanket `< cutoff` that would drop unarchived rows.
-        (
-            to_archive.select("event_id")
-            .write.mode("overwrite")
-            .parquet(os.path.join(ledger, f"batch_id={batch_id}"))
-        )
+        archive_batch({"events": batch_df}, lambda d: d.ts < cutoff, archive, batch_id=batch_id)
 
     stream = (
         spark.readStream.schema(events.schema)
@@ -366,9 +222,8 @@ def stream_archival_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     query.awaitTermination()
 
     archived = spark.read.parquet(archive)
-    ledger_keys = spark.read.parquet(ledger).select("event_id")
     source = spark.read.parquet(staging)
-    remaining = source.join(ledger_keys, "event_id", "left_anti")
+    remaining = source.join(archived.select("event_id"), "event_id", "left_anti")
 
     n_source = source.count()
     n_archived = archived.count()
@@ -2298,12 +2153,13 @@ def source_notify_push_archival(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark, the data lives in a LIVE embedded Derby database the
     writer appends to BEFORE each notify (the commit-then-notify
     ordering that makes the protocol race-free), and the listener's
-    foreachBatch handler runs the incremental JDBC pull
+    foreachBatch handler archives the incremental JDBC pull
     ``id > last_wm AND id <= notified_wm`` (predicate pushed down —
-    each wake-up reads ONLY the notified rows) and appends to the
-    parquet archive. Exactly-once coverage is asserted in-op (the
-    source_jdbc_poll contract): archived rows must partition the
-    fixture, else RuntimeError.
+    each wake-up reads ONLY the notified rows) through
+    ``archive_batch``, one batch directory per notification.
+    Exactly-once coverage is asserted in-op (the source_jdbc_poll
+    contract): archived rows must partition the fixture, else
+    RuntimeError.
 
     At 100 TB this is the shape that replaces interval polling when
     ingest latency matters: wake-ups cost one small file/message each
@@ -2319,7 +2175,7 @@ def source_notify_push_archival(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pg_archiver_spark.sources import derby
 
     events = load(spark, sf_dir, "events").select(
-        "event_id", "user_id", "value"
+        "event_id", "ts", "user_id", "value"
     )
     total = events.count()
     # Rank-derived ID cuts (robust to gapped/duplicated id domains):
@@ -2386,20 +2242,19 @@ def source_notify_push_archival(spark: SparkSession, sf_dir: str) -> DataFrame:
     def handle(batch_df: DataFrame, _epoch: int) -> None:
         # bounded: <= 3 notification payloads per wake-up
         for r in sorted(batch_df.collect(), key=lambda x: x.batch):
-            pulled = (
+            source = (
                 spark.read.format("jdbc")
                 .option("url", url)
                 .option("dbtable", "events_push")
                 .option("driver", derby.DERBY_DRIVER)
                 .option("pushDownPredicate", "true")
                 .load()
-                .filter(
-                    (F.col("event_id") > state["wm"])
-                    & (F.col("event_id") <= r.hi)
-                )
             )
-            n = pulled.count()
-            pulled.write.mode("append").parquet(archive_dir)
+            # A replayed notification overwrites its own batch (D3).
+            n = archive_batch(
+                {"events_push": source}, lambda d: (d.event_id > state["wm"]) & (d.event_id <= r.hi),
+                archive_dir, batch_id=int(r.batch),
+            ).archived_rows["events_push"]
             ledger.append((int(r.batch), n, int(r.hi)))
             state["wm"] = int(r.hi)
 

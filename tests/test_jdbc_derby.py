@@ -247,6 +247,16 @@ def test_read_table_bounds_launch_no_job_live(spark):
     assert sorted(r[0] for r in df.select("event_id").collect()) == list(range(1, 41))
 
 
+def test_read_table_cursors_default_to_the_session_parallelism(spark):
+    """With no ``num_partitions``, a range-partitioned read opens one
+    cursor per core of the session."""
+    url = _stage_keys(spark, range(1, 41))
+    df, _ = read_table(
+        spark, "events", "", partition_column="event_id", url=url, driver=derby.DERBY_DRIVER,
+    )
+    assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
 def test_delete_behind_only_its_table_live(spark, tmp_path):
     """A two-table ledger {events: 1, 2; logs: 7, 8} deletes only the
     events rows tagged in it from the live events table (keys 1..10),

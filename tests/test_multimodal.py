@@ -179,11 +179,12 @@ def test_decoder_roundtrip_randomized_payloads(seed):
     that vary dims / per-scanline filter types (>=1 type-2 Up row
     forced) / channels / rates alongside the exact expected features;
     the decode must match bit-for-bit across 4 seeds x 25 payloads."""
+    import os
     import sys
 
     import numpy as np
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
     from randfixtures import rand_png_payload, rand_wav_payload
 
     from pg_archiver_spark.functions.multimodal import decode_media

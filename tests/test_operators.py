@@ -740,9 +740,10 @@ def test_every_collect_site_is_justified_bounded():
     must carry a '# bounded: ...' justification comment within the
     preceding lines — tools/collectlint.py makes the house convention
     mandatory so an unbounded driver collect cannot land unreviewed."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
     from collectlint import violations
 
     assert violations() == []

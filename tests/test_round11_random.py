@@ -10,6 +10,7 @@ cross-engine sweep for the new ops."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import numpy as np
@@ -18,7 +19,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 import check as ck  # noqa: E402  (driver-faithful comparator)
 
 from pg_archiver_spark.registry import (  # noqa: E402
@@ -318,7 +319,6 @@ _REL_DIR: list[str] = []
 @pytest.fixture(scope="module")
 def rel_corpus(tmp_path_factory):
     if not _REL_DIR:
-        sys.path.insert(0, "/root/repo/tools")
         import randfixtures
 
         d = tmp_path_factory.mktemp("relfix")

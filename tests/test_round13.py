@@ -10,6 +10,7 @@
 
 from __future__ import annotations
 
+import os
 import sys
 
 import numpy as np
@@ -17,7 +18,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 import check as ck  # noqa: E402  (driver-faithful comparator)
 
 from pg_archiver_spark.registry import (  # noqa: E402

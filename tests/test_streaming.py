@@ -4,11 +4,16 @@ incremental archiver's safety invariants (SURVEY.md §5.2)."""
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
+import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from pg_archiver_spark.catalog import load
 from pg_archiver_spark.registry import QUERIES, load_all_operators
+from pg_archiver_spark.sources import derby
 
 load_all_operators()
 
@@ -126,8 +131,106 @@ def test_cli_archiver_counts_from_the_write(spark, sf_dir, tmp_path, monkeypatch
     assert stats["archived_per_table"] == expected
     assert stats["archived_rows"] == sum(expected.values()) > 0
     assert set(stats) == {
-        "batch_id", "tables", "archived_rows", "archived_per_table", "dest", "source_mode",
+        "batch_id", "tables", "archived_rows", "archived_per_table",
+        "deleted_rows", "deleted_per_table", "dest", "source_mode",
     }
+
+
+_CLI_CUTOFF = "2024-01-10"
+
+
+def _stage_cli_source(spark, sf_dir, tmp_path, monkeypatch) -> str:
+    """Stage the events fixture into a fresh Derby database and point
+    the CLI at it with a cutoff that splits the table."""
+    url = derby.stage_frame(spark, load(spark, sf_dir, "events").select(*derby._EVENT_COLUMNS), "events")
+    monkeypatch.delenv("ARCHIVER_SOURCE_DIR", raising=False)
+    monkeypatch.setenv("PG_ARCHIVER_JDBC_URL", url)
+    monkeypatch.setenv("ARCHIVER_CUTOFF", _CLI_CUTOFF)
+    monkeypatch.setenv("ARCHIVER_DEST_DIR", str(tmp_path / "archive"))
+    return url
+
+
+def _split_keys(spark, sf_dir):
+    below = F.col("ts") < F.lit(_CLI_CUTOFF).cast("timestamp")
+    events = load(spark, sf_dir, "events")
+    return [
+        sorted(r[0] for r in events.where(cond).select("event_id").collect())
+        for cond in (below, ~below)
+    ]
+
+
+def _archived_keys(spark, tmp_path):
+    return sorted(r[0] for r in spark.read.parquet(str(tmp_path / "archive")).select("event_id").collect())
+
+
+def _derby_keys(spark, url):
+    rows = spark.read.format("jdbc").option("url", url).option("dbtable", "events").load()
+    return sorted(r[0] for r in rows.select("event_id").collect())
+
+
+def test_cli_archives_and_deletes_behind_live(spark, sf_dir, tmp_path, monkeypatch):
+    """The CLI over a live Derby table runs the whole pipeline: each key
+    below the cutoff lands in the archive once and is deleted from the
+    source, every other key stays, and the report counts both."""
+    from pg_archiver_spark.archiver import run
+
+    url = _stage_cli_source(spark, sf_dir, tmp_path, monkeypatch)
+    below, kept = _split_keys(spark, sf_dir)
+    assert below and kept, "the cutoff must split the fixture"
+    stats = run()
+    assert _archived_keys(spark, tmp_path) == below
+    assert _derby_keys(spark, url) == kept
+    assert stats["source_mode"] == "jdbc"
+    assert stats["deleted_rows"] == stats["archived_rows"] == len(below)
+    assert stats["deleted_per_table"] == stats["archived_per_table"] == {"events": len(below)}
+
+
+def test_cli_rerun_at_one_cutoff_keeps_the_first_archive(spark, sf_dir, tmp_path, monkeypatch):
+    """Two runs at one cutoff within one second of wall clock: the
+    second archives and deletes nothing, under its own batch id, and
+    the first run's archive survives intact."""
+    from pg_archiver_spark.archiver import run
+
+    _stage_cli_source(spark, sf_dir, tmp_path, monkeypatch)
+    below, _ = _split_keys(spark, sf_dir)
+    monkeypatch.setattr(time, "time", lambda: 1_700_000_000.0)
+    first = run()
+    second = run()
+    assert first["archived_rows"] == first["deleted_rows"] == len(below)
+    assert second["archived_rows"] == second["deleted_rows"] == 0
+    assert second["batch_id"] != first["batch_id"]
+    assert _archived_keys(spark, tmp_path) == below
+
+
+@pytest.mark.parametrize(
+    "url, error",
+    [("jdbc:mysql://localhost/db", ValueError), ("jdbc:postgresql://localhost/db", ImportError)],
+)
+def test_cli_unusable_url_fails_before_writing(spark, tmp_path, monkeypatch, url, error):
+    """A URL whose delete-behind cannot run (an unknown scheme, or
+    Postgres without psycopg2) fails before anything is archived."""
+    from pg_archiver_spark.archiver import run
+
+    monkeypatch.setitem(sys.modules, "psycopg2", None)  # import psycopg2 raises
+    monkeypatch.setenv("PG_ARCHIVER_JDBC_URL", url)
+    monkeypatch.setenv("ARCHIVER_DEST_DIR", str(tmp_path / "archive"))
+    with pytest.raises(error):
+        run()
+    assert not (tmp_path / "archive").exists()
+
+
+def test_cli_import_leaves_the_streaming_registry_unloaded():
+    """Importing the CLI module loads neither the streaming registry
+    ops nor a JVM."""
+    probe = (
+        "import sys, pg_archiver_spark.archiver; "
+        "print('pg_archiver_spark.streaming.archival' in sys.modules)"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=root, capture_output=True, text=True, check=True
+    )
+    assert out.stdout.split() == ["False"]
 
 
 def test_stream_stream_join_equals_batch_join(spark, sf_dir):

@@ -22,13 +22,15 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod
 from pg_archiver_spark.catalog import TABLES

@@ -28,9 +28,10 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "pg_archiver_spark")
+PKG = os.path.join(ROOT, "pg_archiver_spark")
 
 BIG_MUL = re.compile(r"\*\s*1[0-9_]{3,}|[0-9_]{4,}\s*\*|\*\s*1e[3-9]")
 MARKERS = (

@@ -6,9 +6,11 @@ rows-only), implementing module, and the docstring's first sentence.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pg_archiver_spark.registry import ORACLES, QUERIES, load_all_operators
 
@@ -68,7 +70,7 @@ def main() -> None:
             oracle += f" · weak_at_scale(→ {WEAK_AT_SCALE[name]})"
         desc = first_sentence(fn.__doc__).replace("|", "\\|")
         lines.append(f"| `{name}` | {oracle} | {module} | {desc} |")
-    with open("/root/repo/OPERATORS.md", "w") as f:
+    with open(os.path.join(ROOT, "OPERATORS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote OPERATORS.md ({len(QUERIES)} operators, {len(ORACLES)} sql-checked)")
 

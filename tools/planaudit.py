@@ -16,9 +16,11 @@ round it happens, not by the judge.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod
 from pg_archiver_spark.plans.inspect import physical_plan
@@ -525,7 +527,7 @@ def main() -> int:
             + ", ".join(f"`{n}`" for n in stale_win),
         ]
 
-    with open("/root/repo/PLANAUDIT.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANAUDIT.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(
         f"wrote PLANAUDIT.md ({len(queries)} ops, {len(flagged)} non-equi "

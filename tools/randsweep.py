@@ -34,11 +34,13 @@ with singleton GROUPS (empty nations, one-order customers) all pass —
 the per-group n=1 paths are covered; only whole-table degeneracy is
 out of contract, and the driver never ships it.
 """
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 import duckdb
 
