@@ -14,7 +14,8 @@ in SURVEY.md §4.4 are fixed here:
   D2 single-partition misplacement   → per-row partitionBy(year, month)
   D3 non-atomic archive+delete       → idempotent per-batch-id output
      dirs: a retried micro-batch overwrites its own output, and the
-     delete ledger is derived from committed archive output only
+     delete ledger is derived from committed archive output only; the
+     delete itself is one transaction per table, all or nothing
   D4 fixed temp path collisions      → committer-managed task files
   D5 timestamp type erasure          → real TimestampType in the archive
 
@@ -162,20 +163,15 @@ def archive_batch(
     return ledger
 
 
-def _env(key: str, default: str) -> str:
-    # getEnv-with-default parity (main.go:272-277).
-    return os.environ.get(key, default)
-
-
 def run() -> dict:
-    tables = [t.strip() for t in _env("ARCHIVER_TABLES", "events").split(",") if t.strip()]
-    retention_days = int(_env("ARCHIVER_RETENTION_DAYS", "90"))
-    source_dir = _env("ARCHIVER_SOURCE_DIR", "")
+    tables = [t.strip() for t in os.environ.get("ARCHIVER_TABLES", "events").split(",") if t.strip()]
+    retention_days = int(os.environ.get("ARCHIVER_RETENTION_DAYS", "90"))
+    source_dir = os.environ.get("ARCHIVER_SOURCE_DIR", "")
     url = os.environ.get(_URL_ENV)
     if not source_dir and not url:
         raise ValueError(f"set ARCHIVER_SOURCE_DIR or {_URL_ENV}: the archiver has no source")
-    dest_dir = _env("ARCHIVER_DEST_DIR", "/tmp/pg_archiver_spark/cli_archive")
-    ts_column = _env("ARCHIVER_TS_COLUMN", "ts")
+    dest_dir = os.environ.get("ARCHIVER_DEST_DIR", "/tmp/pg_archiver_spark/cli_archive")
+    ts_column = os.environ.get("ARCHIVER_TS_COLUMN", "ts")
     explicit_cutoff = os.environ.get("ARCHIVER_CUTOFF")
 
     spark = get_spark("pg_archiver_spark.archiver")

@@ -111,18 +111,20 @@ class DerbyConnection:
         self._jconn.commit()
 
     def close(self) -> None:
-        self._jconn.close()
+        # PEP 249: closing without a commit rolls back. Derby refuses to
+        # close over an open transaction, which would mask the error
+        # that left it open and leak its row locks.
+        try:
+            self._jconn.rollback()
+        finally:
+            self._jconn.close()
 
 
 def connection_factory(spark: SparkSession, url: str):
     """A ``delete_archived``-compatible factory for an embedded Derby URL.
 
-    The returned connection wraps a py4j ``java.sql.Connection``, which
-    cannot be pickled to executors — so the factory is marked
-    ``driver_side`` and ``delete_archived`` deletes from the driver
-    (key runs collected, or keys streamed for non-integer keys) instead
-    of ``mapPartitions`` (the single-writer shape an embedded database
-    implies anyway).
+    Each call opens a driver-side py4j ``java.sql.Connection`` with
+    autocommit off, so ``delete_archived`` deletes in one transaction.
     """
 
     def factory():
@@ -130,5 +132,4 @@ def connection_factory(spark: SparkSession, url: str):
         jconn.setAutoCommit(False)
         return DerbyConnection(jconn)
 
-    factory.driver_side = True
     return factory

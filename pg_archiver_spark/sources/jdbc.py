@@ -12,23 +12,25 @@ No external database ships in this harness, but Spark's own classpath
 carries embedded Apache Derby — so when no URL is configured,
 ``source_jdbc`` stages the fixture into `jdbc:derby:memory:` and the
 real JDBC branch (pushdown, range-partitioned cursors, live
-delete-behind) still executes (see sources/derby.py); the parquet path
-remains only as the degraded fallback (SURVEY.md §7.4 #5: must not fail
-the suite).
+delete-behind) still executes (see sources/derby.py); a failed staging
+raises.
 
 Range partitions are bounded by one ``MIN``/``MAX`` query over a
 driver-side ``java.sql`` connection, not by a Spark job; an empty table
 is read through a single cursor.
 
-Delete-behind (``delete_archived``) deletes integer keys by range, one
+Delete-behind (``delete_archived``) runs on the driver over one
+connection and commits once, like the reference's delete loop
+(main.go:131-145). Integer keys are deleted by range, one
 ``k BETWEEN lo AND hi`` per run of consecutive keys. A ledger returned
 by ``archive_batch`` carries the runs its write proved (its observed
 keys were exactly ``[lo, hi]``, or there were none); those are deleted
-straight from the driver with no ledger scan and no Spark job. Any
-other integer ledger (fragmented, duplicated, spanning 2^15 keys or
-more, or a frame derived from the ledger) is folded into runs inside
-the JVM (``_key_runs``). Key types without integer runs keep the
-key-list form, ``k = ANY(keys)`` or ``k IN (?, ..)``.
+with no ledger scan and no Spark job. Any other integer ledger
+(fragmented, duplicated, spanning 2^15 keys or more, or a frame derived
+from the ledger) is folded into runs inside the JVM (``_key_runs``) and
+streamed to the driver one partition at a time. Key types without
+integer runs keep the key-list form, ``k = ANY(keys)`` or
+``k IN (?, ..)``.
 """
 
 from __future__ import annotations
@@ -119,8 +121,8 @@ def _column_bounds(spark: SparkSession, url: str, driver: str | None, table: str
 
 def url_backend(spark: SparkSession, url: str):
     """``(connection_factory, dialect, driver)`` for a JDBC URL, chosen
-    by its scheme: embedded Derby deletes from the driver over
-    ``java.sql`` in the standard dialect, Postgres through psycopg2."""
+    by its scheme: embedded Derby deletes over ``java.sql`` in the
+    standard dialect, Postgres through psycopg2."""
     if url.startswith("jdbc:derby:"):
         return derby.connection_factory(spark, url), "standard", derby.DERBY_DRIVER
     if url.startswith("jdbc:postgresql:"):
@@ -130,21 +132,12 @@ def url_backend(spark: SparkSession, url: str):
 
 
 def _default_connection_factory():
-    """DB-API connection from the configured URL (psycopg2 when present).
+    """psycopg2 connection to the configured URL. Reached only when the
+    URL is set, so a missing psycopg2 fails here, loudly."""
+    import psycopg2  # noqa: PLC0415 — optional, absent in harness
 
-    Split out so tests — and deployments with a different driver — can
-    inject their own factory; the harness ships neither a database nor
-    psycopg2, so this is exercised only via injection.
-    """
-    url = os.environ.get(_URL_ENV)
-    if not url:
-        return None
-    try:
-        import psycopg2  # noqa: PLC0415 — optional, absent in harness
-    except ImportError:
-        return None
     # JDBC-style URL → DSN accepted by psycopg2 (postgresql://...).
-    return psycopg2.connect(url.removeprefix("jdbc:"))
+    return psycopg2.connect(os.environ[_URL_ENV].removeprefix("jdbc:"))
 
 
 def _key_list_statement(keys, table: str, key_col: str, dialect: str):
@@ -177,14 +170,15 @@ def _delete_partition_kernel(
     dialect: str = "postgres",
     statement=_key_list_statement,
 ) -> int:
-    """Delete one partition's ledger over a fresh connection.
+    """Delete a table's ledger over one fresh connection, in one
+    transaction.
 
     ``items`` are keys (``_key_list_statement``) or ``(lo, hi)`` key
     runs (``_range_statement``), sent ``batch_size`` per statement — one
     round-trip per chunk, where the reference's loop is row-at-a-time
-    (main.go:131-145) — and committed once per partition so a task
-    retry re-deletes idempotently rather than half-committing. Opens no
-    connection when ``items`` is empty.
+    (main.go:131-145) — and committed once, so a failed statement
+    leaves every row in place and a rerun re-deletes idempotently.
+    Opens no connection when ``items`` is empty.
     """
     it = iter(items)
     batch = list(islice(it, batch_size))
@@ -192,16 +186,9 @@ def _delete_partition_kernel(
         return 0
     conn = connection_factory()
     if conn is None:
-        # The driver-side configured check already passed, so a None
-        # connection HERE means the executor environment is broken
-        # (env var or psycopg2 missing on workers). Returning 0 would
-        # be indistinguishable from a successful no-op delete — fail
-        # the task instead so the delete-behind contract is never
-        # silently skipped.
-        raise RuntimeError(
-            "delete-behind: connection_factory returned None on an "
-            "executor after the driver-side configuration check passed"
-        )
+        # Returning 0 would read as a successful no-op delete: fail so
+        # the delete-behind contract is never silently skipped.
+        raise RuntimeError("delete-behind: connection_factory returned None")
     deleted = 0
     try:
         cur = conn.cursor()
@@ -248,15 +235,20 @@ def _key_runs(keys: DataFrame) -> DataFrame:
     )
 
 
-def _merge_runs(runs) -> list[tuple[int, int]]:
-    """Sort runs and join those that abut (split at a bucket edge)."""
-    merged: list[tuple[int, int]] = []
-    for lo, hi in sorted(runs):
-        if merged and lo == merged[-1][1] + 1:
-            merged[-1] = (merged[-1][0], hi)
+def _merge_runs(runs):
+    """Join the abutting runs (split at a bucket edge) of runs sorted by
+    ``lo``, holding one run at a time."""
+    run = None
+    for lo, hi in runs:
+        if run is None:
+            run = (lo, hi)
+        elif lo == run[1] + 1:
+            run = (run[0], hi)
         else:
-            merged.append((lo, hi))
-    return merged
+            yield run
+            run = (lo, hi)
+    if run is not None:
+        yield run
 
 
 def delete_archived(
@@ -276,31 +268,28 @@ def delete_archived(
     ``archive_batch`` returns) may hold several tables; only the rows
     tagged ``table`` are deleted.
 
-    Integer keys are deleted by range, ``k BETWEEN lo AND hi`` per run
-    of consecutive keys, ``batch_size`` runs per statement. A run holds
-    only ledger keys, so for integer keys the range deletes exactly
-    what ``k IN (keys)`` would. Where the runs come from:
+    The delete runs on the driver over one connection from
+    ``connection_factory``, ``batch_size`` items per statement, and
+    commits once, for every factory and dialect. Integer keys are
+    deleted by range, ``k BETWEEN lo AND hi`` per run of consecutive
+    keys; a run holds only ledger keys, so the range deletes exactly
+    what ``k IN (keys)`` would. The items, from the first source that
+    applies:
 
     - proven at write time: ``key_df`` is a ledger ``archive_batch``
       returned and its ``proven_runs`` holds ``(table, key_col)``,
       because the write observed exactly the keys ``[lo, hi]`` (or
-      none). Those runs are deleted from the driver in one transaction,
-      with no ledger scan and no Spark job.
-    - otherwise (fragmented or duplicated keys, a span of 2^15 keys or
-      more, a frame derived from the ledger, any other frame): the
-      ledger's keys become maximal runs in one JVM aggregate
-      (``_key_runs``).
+      none). No ledger scan and no Spark job.
+    - integer keys otherwise (fragmented or duplicated keys, a span of
+      2^15 keys or more, a frame derived from the ledger, any other
+      frame): maximal runs from one JVM aggregate (``_key_runs``),
+      sorted and streamed one partition at a time, runs split at a
+      bucket edge joined on the way.
+    - other key types: the keys, streamed one partition at a time, in
+      the key-list form ``k = ANY(keys)`` / ``k IN (?, ..)``.
 
-    Other key types keep the key-list form, ``k = ANY(keys)`` /
-    ``k IN (?, ..)`` in chunks of ``batch_size`` keys.
-
-    Each partition of runs (or keys) opens its own connection and
-    commits once, so delete throughput scales with partitions and the
-    key set is never collected to the driver. A connection factory
-    marked ``driver_side`` (an embedded database) gets one writer on
-    the driver instead: runs are collected, runs split at bucket edges
-    merged, and deleted in one transaction. No connection is opened
-    for an empty ledger.
+    The driver holds at most one partition of runs or keys. No
+    connection is opened for an empty ledger.
 
     Returns the number of deleted rows; 0 (no-op) when no database is
     configured, so the suite stays green without one.
@@ -310,42 +299,20 @@ def delete_archived(
             return 0
         connection_factory = _default_connection_factory
 
-    proven = vars(key_df).get("proven_runs", {}).get((table, key_col))
-    if proven is not None:
-        return _delete_partition_kernel(
-            proven, table, key_col, connection_factory, batch_size, dialect,
-            _range_statement,
-        )
-    if "table_name" in key_df.columns:
-        key_df = key_df.where(F.col("table_name") == table)
-    keys_only = key_df.select(F.col(key_col))
-    if isinstance(keys_only.schema[0].dataType, IntegralType):
-        statement, items, item = _range_statement, _key_runs(keys_only), tuple
-    else:
-        statement, items, item = _key_list_statement, keys_only, itemgetter(0)
-    if getattr(connection_factory, "driver_side", False):
-        # Single-writer path for connections that cannot ship to
-        # executors (an embedded database's py4j-wrapped java.sql
-        # connection).
-        if statement is _range_statement:
-            # bounded: one row per key run (the ledger's gaps + 1).
-            rows = _merge_runs(map(item, items.collect()))
+    statement = _range_statement
+    items = vars(key_df).get("proven_runs", {}).get((table, key_col))
+    if items is None:
+        if "table_name" in key_df.columns:
+            key_df = key_df.where(F.col("table_name") == table)
+        keys = key_df.select(F.col(key_col))
+        if isinstance(keys.schema[0].dataType, IntegralType):
+            items = _merge_runs(_key_runs(keys).orderBy("lo").toLocalIterator())
         else:
-            # Keys stream one partition at a time: bounded driver memory.
-            rows = map(item, items.toLocalIterator())
-        return _delete_partition_kernel(
-            rows, table, key_col, connection_factory, batch_size, dialect,
-            statement,
-        )
-    counts = items.rdd.mapPartitions(
-        lambda part: [
-            _delete_partition_kernel(
-                map(item, part), table, key_col, connection_factory,
-                batch_size, dialect, statement,
-            )
-        ]
+            statement = _key_list_statement
+            items = map(itemgetter(0), keys.toLocalIterator())
+    return _delete_partition_kernel(
+        items, table, key_col, connection_factory, batch_size, dialect, statement,
     )
-    return int(counts.sum())
 
 
 @register(
@@ -354,10 +321,9 @@ def delete_archived(
     # counts are deterministic — staging events into Derby and reading
     # them back through range-partitioned JDBC cursors must preserve
     # every row, so the extracted profile equals the same profile on
-    # the parquet source. `live` pins that a real database path ran
-    # (not the parquet fallback): a degraded environment now FAILS the
-    # hash instead of passing rows-only — Derby ships in Spark's own
-    # classpath, so a fallback is a defect worth failing on.
+    # the parquet source. `live` pins that a real database path ran:
+    # Derby ships in Spark's own classpath, so a failed staging raises
+    # instead of degrading to the parquet source.
     oracle="""
     SELECT TRUE AS live,
            COUNT(*) AS n_rows,
@@ -372,19 +338,13 @@ def source_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the events fixture staged into embedded in-memory Derby (shipped in
     Spark's own classpath) — so the real ``spark.read.format("jdbc")``
     branch with range-partitioned parallel cursors executes (reference
-    extraction main.go:88-121), not the parquet stand-in. The parquet
-    fallback survives only as the degraded path when even the embedded
-    staging fails (and is now a hash FAIL, by design)."""
+    extraction main.go:88-121), not the parquet stand-in. A failed
+    staging raises."""
     url = os.environ.get(_URL_ENV)
     driver = None
-    backend = "external"
     if not url:
-        try:
-            url = derby.stage_events(spark, sf_dir)
-            driver = derby.DERBY_DRIVER
-            backend = "derby-embedded"
-        except Exception:  # staging write failed: degrade, don't error
-            url, backend = None, "parquet-fallback"
+        url = derby.stage_events(spark, sf_dir)
+        driver = derby.DERBY_DRIVER
     df, mode = read_table(
         spark,
         "events",
@@ -397,7 +357,7 @@ def source_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts") < F.lit("2024-01-15 00:00:00").cast("timestamp")
     )
     return extracted.agg(
-        F.lit(mode == "jdbc" and backend != "parquet-fallback").alias("live"),
+        F.lit(mode == "jdbc").alias("live"),
         F.count("*").alias("n_rows"),
         F.countDistinct("user_id").alias("n_users"),
     )

@@ -9,7 +9,6 @@ D1-D5 defect fixes.
 from __future__ import annotations
 
 import os
-import re
 import shutil
 from contextlib import contextmanager
 
@@ -27,19 +26,21 @@ _WORK_ROOT = f"/tmp/pg_archiver_spark-{os.getpid()}"
 
 
 @contextmanager
-def _scoped_state_partitions(spark: SparkSession, default: str):
+def _scoped_state_partitions(spark: SparkSession, width: str):
     """Scope spark.sql.shuffle.partitions (= streaming state-store
-    partition count, pinned into the checkpoint at first start) for one
-    streaming query, restored afterwards — the measured-optimum knob
-    pattern stream_state_timeout_sessions established. Each micro-batch
-    pays one state-store commit PER PARTITION per stateful operator, so
-    at fixture key cardinality the session's 32-wide default is almost
-    pure commit overhead; results are identical at any width (state is
-    per-key) and every run stages a fresh checkpoint, so there is no
-    replay-mismatch risk. Env-overridable (SPARK_GRAFT_STATE_PARTS) so
-    the value can be re-A/B'd per box or sized with key cardinality on
-    a cluster — at 100 TB this scales UP; the knob, not the value, is
-    the point.
+    partition count, pinned into the checkpoint at first start) to
+    ``width`` for one streaming query, restored on exit — the
+    measured-optimum knob pattern stream_state_timeout_sessions
+    established. Each micro-batch pays one state-store commit PER
+    PARTITION per stateful operator, so at fixture key cardinality the
+    session's 32-wide default is almost pure commit overhead; results
+    are identical at any width (state is per-key) and every run stages
+    a fresh checkpoint, so there is no replay-mismatch risk. At 100 TB
+    the width scales UP with key cardinality. The state-store provider
+    is Spark's own ``spark.sql.streaming.stateStore.providerClass``, set
+    per deployment with ``--conf``: at 262144 live keys / 1.05M sessions
+    RocksDB measured 109 s against the default HDFS provider's 126 s,
+    while at fixture cardinality HDFS stays fastest.
 
     SERIAL-EXECUTION ASSUMPTION (ADVICE r13): this mutates the
     session-global spark.sql.shuffle.partitions for the query's
@@ -51,60 +52,13 @@ def _scoped_state_partitions(spark: SparkSession, default: str):
     queries strictly serially — the same contract
     stream_state_timeout_sessions' inline knob has relied on since r8.
     If an embedder ever plans queries concurrently, scope the conf via
-    a cloned session (spark.newSession()) instead.
-
-    r14 (VERDICT r13 item 1): also scopes the state-store PROVIDER via
-    SPARK_GRAFT_STATE_PROVIDER ("hdfs" | "rocksdb" | a full provider
-    class name; unset = leave the session default; anything else raises
-    ValueError before the query starts). A provider key the session did
-    not set on entry is unset again on exit. The r13 RocksDB rejection
-    was adjudicated at fixture key cardinality, where the in-memory
-    HDFSBackedStateStore has nothing to spill; re-A/B'd at 262144 live
-    keys / 1.05M sessions (a synthetic corpus through the same
-    applyInPandasWithState topology): RocksDB 109.0-109.3 s at 32/64
-    partitions vs HDFS best 125.9 s at 32 (and HDFS degrades to 218 s
-    at 64 while RocksDB stays flat), with the HDFS provider holding
-    ~136 MB of state heap per 262k keys that RocksDB keeps off-heap.
-    At fixture cardinality HDFS remains fastest (no spill, lower
-    per-query provider init) — so the LOCAL default stays the session
-    provider (HDFS) and a cluster deployment at realistic cardinality
-    sets SPARK_GRAFT_STATE_PROVIDER=rocksdb and sizes
-    SPARK_GRAFT_STATE_PARTS with key cardinality."""
-    _PROVIDERS = {
-        "hdfs": (
-            "org.apache.spark.sql.execution.streaming.state."
-            "HDFSBackedStateStoreProvider"
-        ),
-        "rocksdb": (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        ),
-    }
-    _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-    raw = os.environ.get("SPARK_GRAFT_STATE_PROVIDER")
-    provider = _PROVIDERS.get(raw.lower(), raw) if raw else None
-    dotted = r"[A-Za-z_$][\w$]*(\.[A-Za-z_$][\w$]*)+"
-    if provider and not re.fullmatch(dotted, provider):
-        raise ValueError(
-            "SPARK_GRAFT_STATE_PROVIDER must be 'hdfs', 'rocksdb' or a "
-            f"provider class name, got {raw!r}"
-        )
+    a cloned session (spark.newSession()) instead."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STATE_PARTS", default),
-    )
-    prev_provider = spark.conf.get(_PROVIDER_KEY, None)  # None: unset
-    if provider:
-        spark.conf.set(_PROVIDER_KEY, provider)
+    spark.conf.set("spark.sql.shuffle.partitions", width)
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if provider and prev_provider is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        elif provider:
-            spark.conf.set(_PROVIDER_KEY, prev_provider)
 
 
 def _fresh_dir(*parts: str) -> str:
@@ -1174,14 +1128,8 @@ def stream_state_timeout_sessions(spark: SparkSession, sf_dir: str) -> DataFrame
     # 100 TB you'd size this UP with key cardinality — the knob, not
     # the value, is the point. The conf is pinned into the checkpoint
     # at first start, and each run stages a fresh checkpoint, so there
-    # is no replay-mismatch risk. r13: the value is env-overridable
-    # (SPARK_GRAFT_STATE_PARTS) so the knob can be re-A/B'd per box /
-    # sized with key cardinality on a cluster without a code edit;
-    # the local default stays the measured optimum. r14: routed through
-    # _scoped_state_partitions, which additionally scopes the state-
-    # store provider (SPARK_GRAFT_STATE_PROVIDER) — see its docstring
-    # for the 1.05M-session A/B that picks RocksDB at realistic key
-    # cardinality while HDFS stays the fixture-scale default.
+    # is no replay-mismatch risk; _scoped_state_partitions restores the
+    # session's width on exit.
     with _scoped_state_partitions(spark, "16"):
         query = (
             sessions.writeStream.format("memory")

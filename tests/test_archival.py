@@ -142,66 +142,54 @@ def test_delete_kernel_deletes_exact_keys_in_chunks():
     assert state == {"commits": 1, "closed": True}
 
 
-def test_delete_archived_distributes_exact_key_set(spark, tmp_path):
-    """The distributed path deletes each archived key exactly once,
-    partition-wise, with no driver-side collect of the key frame. Long
-    keys go out as BETWEEN ranges; expanding them gives every key once."""
+def test_delete_archived_postgres_ledger_through_one_connection(spark):
+    """A fragmented ``postgres``-dialect ledger spread over 4 partitions
+    is deleted from the driver through one connection with one commit,
+    however its factory is built: every key once, as BETWEEN ranges."""
     from pg_archiver_spark.sources.jdbc import delete_archived
 
-    sink = str(tmp_path / "deleted")
-    import os
+    seen = {"connections": 0, "commits": 0, "keys": []}
 
-    os.makedirs(sink, exist_ok=True)
+    class Cursor:
+        rowcount = 0
 
-    def factory(sink=sink):
-        import os
-        import uuid
+        def execute(self, sql, params):
+            runs = list(zip(params[::2], params[1::2]))
+            assert sql == "DELETE FROM iot_data WHERE " + " OR ".join(
+                ["event_id BETWEEN %s AND %s"] * len(runs)
+            )
+            keys = [k for lo, hi in runs for k in range(lo, hi + 1)]
+            seen["keys"] += keys
+            self.rowcount = len(keys)
 
-        class Cursor:
-            rowcount = 0
+    class Conn:
+        def cursor(self):
+            return Cursor()
 
-            def execute(self, sql, params):
-                runs = list(zip(params[::2], params[1::2]))
-                assert sql == "DELETE FROM iot_data WHERE " + " OR ".join(
-                    ["event_id BETWEEN %s AND %s"] * len(runs)
-                )
-                keys = [k for lo, hi in runs for k in range(lo, hi + 1)]
-                path = os.path.join(sink, uuid.uuid4().hex)
-                with open(path, "w") as f:
-                    f.write("\n".join(str(k) for k in keys))
-                self.rowcount = len(keys)
+        def commit(self):
+            seen["commits"] += 1
 
-        class Conn:
-            def cursor(self):
-                return Cursor()
+        def close(self):
+            pass
 
-            def commit(self):
-                pass
-
-            def close(self):
-                pass
-
+    def factory():
+        seen["connections"] += 1
         return Conn()
 
-    keys = spark.range(0, 100).select(F.col("id").alias("event_id")).repartition(4)
+    ledger = [k for k in range(200) if k % 7 not in (3, 4)]
+    keys = spark.createDataFrame([(k,) for k in ledger], "event_id long").repartition(4)
     n = delete_archived(
         spark, "iot_data", keys, key_col="event_id",
         connection_factory=factory, batch_size=16,
     )
-    assert n == 100
-    import os as _os
-
-    written = []
-    for name in _os.listdir(sink):
-        with open(_os.path.join(sink, name)) as f:
-            written += [int(line) for line in f.read().splitlines() if line]
-    assert sorted(written) == list(range(100))
+    assert n == len(ledger)
+    assert sorted(seen["keys"]) == ledger
+    assert (seen["connections"], seen["commits"]) == (1, 1)
 
 
 def test_delete_kernel_rejects_missing_connection():
-    """A factory that yields no connection inside the distributed path
-    (env/driver check already passed) must FAIL the task, not report 0
-    deletions that read as a successful no-op."""
+    """A factory that yields no connection must FAIL the delete, not
+    report 0 deletions that read as a successful no-op."""
     import pytest
 
     from pg_archiver_spark.sources.jdbc import _delete_partition_kernel
@@ -240,7 +228,7 @@ def test_delete_kernel_ignores_unknown_rowcount():
 
 
 class _FakeTable:
-    """An in-memory table behind a driver-side DB-API factory: applies
+    """An in-memory table behind a DB-API factory: applies
     each ``standard``-dialect BETWEEN DELETE it is sent to its row set,
     so rowcounts and survivors are real."""
 
@@ -277,7 +265,6 @@ class _FakeTable:
             table.connections += 1
             return Conn()
 
-        connect.driver_side = True
         return connect
 
 
@@ -341,8 +328,8 @@ def test_delete_archived_batches_runs_per_statement(spark):
 
 @pytest.mark.parametrize("key_type", ["long", "string"])
 def test_delete_archived_empty_ledger_opens_no_connection(spark, key_type):
-    """An empty ledger on the distributed path deletes nothing and never
-    opens a connection (no no-op commit per partition)."""
+    """An empty ledger spread over partitions deletes nothing and never
+    opens a connection (no no-op commit)."""
     from pg_archiver_spark.sources.jdbc import delete_archived
 
     def factory():

@@ -4,6 +4,7 @@ caches that notice a rewritten file."""
 from __future__ import annotations
 
 import os
+import re
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -12,8 +13,6 @@ import pytest
 from pg_archiver_spark import session
 from pg_archiver_spark.catalog import fan_out, load
 from pg_archiver_spark.streaming.archival import _scoped_state_partitions
-
-_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
 
 
 def test_driver_heap_default_fits_the_host(spark):
@@ -68,21 +67,21 @@ def test_split_cache_follows_max_partition_bytes(spark, tmp_path):
         spark.conf.set(key, prev)
 
 
-def test_state_provider_unset_on_entry_is_unset_on_exit(spark, monkeypatch):
-    spark.conf.unset(_PROVIDER_KEY)
-    monkeypatch.setenv("SPARK_GRAFT_STATE_PROVIDER", "rocksdb")
-    with _scoped_state_partitions(spark, "8"):
-        assert spark.conf.get(_PROVIDER_KEY).endswith("RocksDBStateStoreProvider")
-    assert spark.conf.get(_PROVIDER_KEY, None) is None
-
-
-def test_state_provider_typo_is_rejected_before_any_conf_changes(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_STATE_PROVIDER", "rocksbd")
-    parts = spark.conf.get("spark.sql.shuffle.partitions")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_STATE_PROVIDER"):
+def test_state_partitions_scope_sets_and_restores_the_width(spark, monkeypatch):
+    """The caller's width holds inside the scope, whatever the
+    environment says, and the session's width is back after it, also
+    when the body raises."""
+    monkeypatch.setenv("SPARK_GRAFT_STATE_PARTS", "5")  # retired: no effect
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    with _scoped_state_partitions(spark, "3"):
+        assert spark.conf.get(key) == "3"
+    assert spark.conf.get(key) == before
+    with pytest.raises(RuntimeError, match="body failed"):
         with _scoped_state_partitions(spark, "3"):
-            pass
-    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+            assert spark.conf.get(key) == "3"
+            raise RuntimeError("body failed")
+    assert spark.conf.get(key) == before
 
 
 def test_pagerank_edges_are_symmetric_with_out_degree(spark, sf_dir):
@@ -106,3 +105,37 @@ def test_cli_without_a_source_fails_before_writing(tmp_path, monkeypatch):
     with pytest.raises(ValueError, match="ARCHIVER_SOURCE_DIR"):
         run()
     assert not (tmp_path / "archive").exists()
+
+
+_ENV_READ = re.compile(r"""(?:environ\.get|environ|getenv)[(\[]\s*(["']?)(\w+)\1""")
+
+
+def test_program_reads_exactly_the_listed_env_vars():
+    """Every environment variable the package reads is listed here: a
+    new knob fails this test until it is added on purpose."""
+    root = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "pg_archiver_spark")
+    sources = []
+    for folder, _, files in os.walk(root):
+        for name in files:
+            if name.endswith(".py"):
+                with open(os.path.join(folder, name)) as f:
+                    sources.append(f.read())
+    # Module constants that hold a name (``_URL_ENV = "..."``).
+    constants = dict(re.findall(r'^(\w+) = "(\w+)"$', "\n".join(sources), re.M))
+    names = {
+        ref if quote else constants[ref]
+        for src in sources
+        for quote, ref in _ENV_READ.findall(src)
+    }
+    assert names == {
+        "ARCHIVER_TABLES",
+        "ARCHIVER_RETENTION_DAYS",
+        "ARCHIVER_SOURCE_DIR",
+        "ARCHIVER_DEST_DIR",
+        "ARCHIVER_CUTOFF",
+        "ARCHIVER_TS_COLUMN",
+        "PG_ARCHIVER_JDBC_URL",
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_ON_CLUSTER",
+        "PG_ARCHIVER_FAKE_DECODE",
+    }

@@ -127,7 +127,6 @@ def _recording_factory(spark, url, statements):
     def factory():
         return Conn(inner()._jconn)
 
-    factory.driver_side = True
     return factory
 
 
@@ -288,6 +287,55 @@ def test_delete_behind_only_its_table_live(spark, tmp_path):
         assert deleted == 2
         assert _derby_keys(spark, url) == list(range(3, 11))
         assert statements == ['DELETE FROM events WHERE "event_id" BETWEEN ? AND ?']
+
+
+def _sql(spark, url, sql):
+    """Run one statement over a fresh autocommit connection; the first
+    column of a query's first row, else None."""
+    conn = spark._jvm.java.sql.DriverManager.getConnection(url)
+    try:
+        st = conn.createStatement()
+        if st.execute(sql):
+            rs = st.getResultSet()
+            rs.next()
+            return rs.getObject(1)
+        return None
+    finally:
+        conn.close()
+
+
+def test_failed_delete_rolls_back_live(spark):
+    """A delete is all or nothing: when the second of two one-run
+    statements fails, its own error surfaces (not Derby's refusal to
+    close over an open transaction), all 10 rows stay, the table reads
+    at once (a leaked row lock would time out after 1 s) and a later
+    delete works."""
+    import pytest
+    from py4j.protocol import Py4JJavaError
+
+    from pg_archiver_spark.sources.jdbc import _delete_partition_kernel, _range_statement
+
+    url = _stage_keys(spark, range(1, 11))
+    _sql(spark, url, "CALL SYSCS_UTIL.SYSCS_SET_DATABASE_PROPERTY('derby.locks.waitTimeout', '1')")
+    calls = []
+
+    def second_fails(runs, table, key_col, dialect):
+        calls.append(runs)
+        return _range_statement(runs, "no_such_table" if len(calls) == 2 else table, key_col, dialect)
+
+    factory = derby.connection_factory(spark, url)
+    with pytest.raises(Py4JJavaError, match="SQLSyntaxErrorException"):
+        _delete_partition_kernel(
+            [(1, 2), (5, 6)], "events", "event_id", factory, batch_size=1,
+            dialect="standard", statement=second_fails,
+        )
+    assert len(calls) == 2
+    assert _sql(spark, url, "SELECT COUNT(*) FROM events") == 10
+    assert _delete_partition_kernel(
+        [(1, 2), (5, 6)], "events", "event_id", factory, batch_size=1,
+        dialect="standard", statement=_range_statement,
+    ) == 4
+    assert _derby_keys(spark, url) == [3, 4, 7, 8, 9, 10]
 
 
 def test_jdbc_poll_loop_partitions_arrivals(spark, sf_dir):
